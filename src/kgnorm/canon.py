@@ -17,7 +17,8 @@ Algorithm (driver-side loop over DataFrames):
    a hot concept with many aliases concentrates on one key, so the
    neighbor-min aggregation is pre-salted: a first partial ``groupBy``
    on ``(dst, salt)`` then a final ``groupBy(dst)`` (SURVEY §4);
-3. stop when no label changed (count of changed rows == 0);
+3. stop when no label changed: the round's eager checkpoint counts its
+   changed rows through an ``Observation``, so no extra job asks;
 4. canonical representative per component = the component's preferred
    member: a 'Maps to' **target** that is never itself a 'Maps to'
    source (i.e. a chain terminal), tie-broken by min concept_id;
@@ -29,7 +30,7 @@ don't grow exponentially.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 DEFAULT_SALT = 16
 
@@ -57,7 +58,7 @@ def connected_components(
     ``loop_partitions`` temporarily overrides
     ``spark.sql.shuffle.partitions`` for the iterative loop (restored
     after): each iteration runs 2 joins + 2 aggregations + an eager
-    checkpoint + a convergence count, so with a KNOWN-small edge list
+    checkpoint, so with a KNOWN-small edge list
     (the ontology alias graph) session-default partition counts make
     fixed per-task scheduling dominate the loop.  Leave None for
     unknown-size inputs (document near-dup clustering), where AQE
@@ -83,6 +84,7 @@ def _cc_loop(edges: DataFrame, max_iter: int, salt: int) -> DataFrame:
     )
 
     for _ in range(max_iter):
+        changed = Observation()
         # propagate each vertex's label to its neighbors, take the min.
         # two-level aggregation: partial min on (dst, salt) absorbs hot
         # vertices before the final per-dst min.
@@ -98,23 +100,23 @@ def _cc_loop(edges: DataFrame, max_iter: int, salt: int) -> DataFrame:
             .select(
                 "concept_id",
                 F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
-                # convergence flag carried through the checkpoint so the
-                # changed-check reads materialized rows instead of
-                # re-joining old vs new labels (one fewer shuffle/iter)
+                # convergence flag counted by the checkpoint job itself,
+                # instead of re-joining old vs new labels or a second job
                 (F.coalesce(F.col("nbr_label"), F.col("label")) < F.col("label")).alias("_chg"),
             )
+            .observe(changed, F.count_if("_chg").alias("n"))
             .localCheckpoint(eager=True)
         )
-        changed = new_full.filter(F.col("_chg")).limit(1).count()
         labels = new_full.select("concept_id", "label")
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
 
     return labels.select("concept_id", F.col("label").alias("component_id"))
 
 
 def canonical_mapping(relationships: DataFrame,
-                      loop_partitions: int | None = None) -> DataFrame:
+                      loop_partitions: int | None = None,
+                      n_rel: int | None = None) -> DataFrame:
     """(concept_id → canonical_concept_id) for every aliased concept.
 
     Canonical = per component, the chain-terminal 'Maps to' target
@@ -127,12 +129,18 @@ def canonical_mapping(relationships: DataFrame,
     session-default partition counts fixed per-task scheduling across
     the CC loop's ~2 iterations dominated the canon stage (measured
     4.9 s of the bench's 7.4 s canon time at 1M turns).  Default
-    ``None`` sizes from the actual edge count (one cheap count job):
-    ~100k edges per partition, floor 8, capped at the session default —
-    so a full-OMOP alias graph (~10M rows) still gets wide shuffles
-    while the fixture-sized graph stops paying 64-task fixed costs.
+    ``None`` sizes from the edge count: ~100k edges per partition, floor
+    8, capped at the session default — so a full-OMOP alias graph (~10M
+    rows) still gets wide shuffles while the fixture-sized graph stops
+    paying 64-task fixed costs.  A caller that already holds the
+    relationship row count passes it as ``n_rel`` (each row gives at
+    most two undirected edges); otherwise one count job measures it.
     The returned mapping is checkpointed — downstream broadcasts read
     materialized rows, not a replan at restored session partitioning.
+
+    The override is session-wide, so a caller running other stages at
+    the same time passes relationships built in ``spark.newSession()``,
+    which shares the SparkContext but has its own SQL conf.
     """
     from kgnorm.session import conf_override
 
@@ -140,7 +148,8 @@ def canonical_mapping(relationships: DataFrame,
     edges = alias_edges(relationships)
     if loop_partitions is None:
         sess = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        loop_partitions = max(8, min(sess, edges.count() // 100_000 + 1))
+        n_edges = 2 * n_rel if n_rel is not None else edges.count()
+        loop_partitions = max(8, min(sess, n_edges // 100_000 + 1))
     with conf_override(spark, "spark.sql.shuffle.partitions", loop_partitions):
         comps = _cc_loop(edges, 25, DEFAULT_SALT)
 
@@ -169,7 +178,13 @@ def canonical_mapping(relationships: DataFrame,
 
 
 def canonicalize_facts(facts: DataFrame, relationships: DataFrame) -> DataFrame:
-    """Rewrite fact concept ids onto canonical concepts and re-merge.
+    """Rewrite fact concept ids onto canonical concepts and re-merge:
+    ``apply_mapping`` over ``canonical_mapping(relationships)``."""
+    return apply_mapping(facts, canonical_mapping(relationships))
+
+
+def apply_mapping(facts: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Rewrite fact concept ids through a ``canonical_mapping`` and re-merge.
 
     A broadcast join (the alias mapping is ontology-sized, i.e. tiny
     relative to facts), then the same 5-part-key noisy-OR re-aggregation
@@ -188,7 +203,6 @@ def canonicalize_facts(facts: DataFrame, relationships: DataFrame) -> DataFrame:
     shuffle.  The re-aggregation exchange then carries only the affected
     rows, which are ontology-bounded in share, not turn-bounded.
     """
-    mapping = canonical_mapping(relationships)
     cid_type = dict(mapping.dtypes)["canonical_concept_id"]
     # effects table: source ids (rewritten) + target ids (mergeable-into);
     # the two sets are disjoint (a canonical target never rewrites)

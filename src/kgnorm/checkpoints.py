@@ -70,9 +70,10 @@ class StageStore:
             registered = None
         return registered is None and "." not in self.catalog
 
-    def exists(self, name: str) -> bool:
+    def exists(self, name: str, spark: SparkSession | None = None) -> bool:
         if self.catalog:
-            spark = SparkSession.getActiveSession()
+            # a driver thread has no active session: callers there pass one
+            spark = spark or SparkSession.getActiveSession()
             return spark is not None and spark.catalog.tableExists(f"{self.catalog}.{name}")
         return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
 
@@ -131,7 +132,7 @@ class StageStore:
         ``compute`` is a zero-arg callable returning the stage DataFrame.
         With ``resume=False`` the stage always recomputes (overwrite).
         """
-        if resume and self.exists(name):
+        if resume and self.exists(name, spark):
             return self.read(spark, name)
         df = compute()
         self.write(df, name, partition_by=partition_by)

@@ -1,15 +1,27 @@
 """End-to-end pipeline orchestration (the spark-submit entry point).
 
-One Spark job replaces the reference's API→Redis→RQ-worker→Postgres
-round-trip loop (jobs/document_processing.py:92-310, SURVEY §3.1)::
+One Spark application replaces the reference's API→Redis→RQ-worker→
+Postgres round-trip loop (jobs/document_processing.py:92-310, SURVEY §3.1).
+Stages whose inputs are ready run as concurrent Spark jobs, each branch
+submitted from its own driver thread (Spark's scheduling within an
+application); the arrows are the only ordering::
 
-    read transcripts
-      → extract   (shuffle-free partition cap + broadcast-AC Arrow UDF)
+    ontology ──→ alias closure ─────────────────────╮  (--canonicalize)
+       ↓ dictionary, concepts                        │
+    transcripts                                      │
+      → extract   (shuffle-free cap + broadcast-AC Arrow UDF)
       → link      (broadcast dictionary direct path + tiered cascade)
-      → facts     (5-part-key noisy-OR hash agg)
-      → canon     (optional: Maps-to closure via hash-min CC)
-      → graph     (nodes/edges/triples, deterministic ids)
-      → metrics   (per-partition lineage rows)
+      → facts     (5-part-key noisy-OR hash agg)     │
+          ├──→ canonical_facts ←─────────────────────╯
+          │      → canonical_triples
+          └──→ graph_base  (one window for nodes/edges/triples)
+                 ├──→ nodes
+                 ├──→ edges
+                 └──→ triples → metrics  (per-partition lineage rows)
+
+The alias closure (Maps-to hash-min connected components, kgnorm.canon)
+reads only the ontology, so it runs while extraction does, in a session
+of its own (see ``_alias_closure``).
 
 Each stage checkpoints through a StageStore; ``--resume`` skips stages
 whose outputs already exist.  Run it on a cluster as::
@@ -23,11 +35,15 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kgnorm import canon, extract, facts as facts_mod, graph, link, metrics, ontology, synth
 from kgnorm.checkpoints import StageStore
+
+BRANCH_THREAD = "kgnorm-branch"
 
 
 def run_pipeline(
@@ -44,6 +60,10 @@ def run_pipeline(
     With a ``store``, stages checkpoint and (with ``resume=True``) skip
     recomputation.  ``canonicalize`` adds the CC-based alias-merged fact
     and triple outputs alongside the parity (reference-faithful) ones.
+
+    Branches that do not depend on each other (see the module docstring)
+    run as concurrent Spark jobs from driver threads.  A branch's
+    exception is raised here once every branch has ended.
     """
     ont = ontology.load_fixture_ontology(data_dir)
     dictionary = ontology.broadcast_dictionary(spark, ont)
@@ -58,53 +78,93 @@ def run_pipeline(
             return compute().persist()
         return store.get_or_compute(spark, name, compute, resume=resume, partition_by=partition_by)
 
-    mentions = checkpointed(
-        "mentions", lambda: extract.extract_mentions_df(transcripts, dictionary, num_partitions)
-    )
-    all_direct = ontology.all_entries_linked(ont)
-    candidates = checkpointed(
-        "candidates",
-        lambda: link.link_mentions(mentions, concepts, synonyms, assume_all_direct=all_direct),
-    )
-    top = link.top_candidates(candidates)
-    facts = checkpointed(
-        "facts", lambda: facts_mod.build_facts(facts_mod.mention_facts_input(mentions, top))
-    )
-    # one shared window for nodes/edges/triples (see graph.first_facts)
-    graph_base = checkpointed("graph_base", lambda: graph.first_facts(facts))
-    nodes = checkpointed("nodes", lambda: graph.build_nodes(graph_base, prepared=True))
-    edges = checkpointed("edges", lambda: graph.build_edges(graph_base, prepared=True))
-    triples = checkpointed("triples", lambda: graph.build_triples(graph_base, prepared=True))
+    branches: dict[str, Future] = {}
+    # one thread per branch, so a branch waiting on another's result
+    # never holds the thread that one needs
+    with ThreadPoolExecutor(max_workers=6, thread_name_prefix=BRANCH_THREAD) as pool:
 
+        def branch(name: str, fn, *args) -> Future:
+            # each task gets its own copy of the caller's local properties
+            # (job group, scheduler pool): Spark keeps a running query's
+            # execution id there, so two threads must not share one copy
+            branches[name] = pool.submit(inheritable_thread_target(spark)(fn), *args)
+            return branches[name]
+
+        closure = None
+        if canonicalize and not (
+                resume and store is not None and store.exists("canonical_facts", spark)):
+            closure = branch("closure", _alias_closure, spark, ont)
+
+        mentions = checkpointed(
+            "mentions", lambda: extract.extract_mentions_df(transcripts, dictionary, num_partitions)
+        )
+        all_direct = ontology.all_entries_linked(ont)
+        candidates = checkpointed(
+            "candidates",
+            lambda: link.link_mentions(mentions, concepts, synonyms, assume_all_direct=all_direct),
+        )
+        top = link.top_candidates(candidates)
+        facts = checkpointed(
+            "facts", lambda: facts_mod.build_facts(facts_mod.mention_facts_input(mentions, top))
+        )
+
+        if canonicalize:
+            def canonical() -> tuple[DataFrame, DataFrame]:
+                canonical_facts = checkpointed(
+                    "canonical_facts", lambda: canon.apply_mapping(facts, closure.result())
+                )
+                return canonical_facts, checkpointed(
+                    "canonical_triples", lambda: graph.build_triples(canonical_facts)
+                )
+
+            branch("canonical", canonical)
+
+        # one shared window for nodes/edges/triples (see graph.first_facts)
+        graph_base = checkpointed("graph_base", lambda: graph.first_facts(facts))
+        for name, build in (("nodes", graph.build_nodes), ("edges", graph.build_edges),
+                            ("triples", graph.build_triples)):
+            branch(name, checkpointed, name,
+                   lambda build=build: build(graph_base, prepared=True))
+
+        if store is not None:
+            triples = branches["triples"]
+
+            def lineage() -> DataFrame:
+                all_metrics = (
+                    metrics.stage_metrics(mentions, "mentions")
+                    .unionByName(metrics.stage_metrics(facts, "facts"))
+                    .unionByName(metrics.stage_metrics(triples.result(), "triples"))
+                )
+                store.write(all_metrics, "metrics")
+                return store.read(spark, "metrics")
+
+            branch("metrics", lineage)
+
+    # every thread has ended; read each result so a branch's failure raises
+    done = {name: f.result() for name, f in branches.items()}
     out = {
         "mentions": mentions,
         "candidates": candidates,
         "facts": facts,
-        "nodes": nodes,
-        "edges": edges,
-        "triples": triples,
+        "nodes": done["nodes"],
+        "edges": done["edges"],
+        "triples": done["triples"],
     }
-
     if canonicalize:
-        relationships = ontology.relationships_df(spark, ont)
-        canonical_facts = checkpointed(
-            "canonical_facts", lambda: canon.canonicalize_facts(facts, relationships)
-        )
-        out["canonical_facts"] = canonical_facts
-        out["canonical_triples"] = checkpointed(
-            "canonical_triples", lambda: graph.build_triples(canonical_facts)
-        )
-
+        out["canonical_facts"], out["canonical_triples"] = done["canonical"]
     if store is not None:
-        all_metrics = (
-            metrics.stage_metrics(mentions, "mentions")
-            .unionByName(metrics.stage_metrics(facts, "facts"))
-            .unionByName(metrics.stage_metrics(triples, "triples"))
-        )
-        store.write(all_metrics, "metrics")
-        out["metrics"] = store.read(spark, "metrics")
-
+        out["metrics"] = done["metrics"]
     return out
+
+
+def _alias_closure(spark: SparkSession, ont: ontology.Ontology) -> DataFrame:
+    """The ontology's alias mapping (``canon.canonical_mapping``), built in
+    its own session: the closure overrides ``spark.sql.shuffle.partitions``
+    for its loop, and stages planned meanwhile in ``spark`` must keep the
+    caller's value.  The mapping is checkpointed, so joining it into
+    ``spark``'s plans reads its rows and replans nothing."""
+    relationships = ontology.relationships_df(spark.newSession(), ont)
+    return canon.canonical_mapping(relationships, n_rel=len(ont.relationships))
 
 
 def run_append(
@@ -196,14 +256,17 @@ def main() -> None:
     else:
         transcripts = synth.synth_transcripts(spark, args.synth_turns)
 
-    assert metrics.turn_order_check(transcripts) == 0, "duplicate (conv_id, turn_idx) keys"
+    # before any checkpoint write; the same query counts the input
+    order = metrics.turn_order_check(transcripts)
+    if order.duplicate_keys:
+        raise ValueError(f"{order.duplicate_keys} duplicate (conv_id, turn_idx) keys")
+    n_turns = order.turns
 
     if args.append:
         out = run_append(spark, transcripts, args.output,
                          num_partitions=args.partitions)
         violations = metrics.mention_span_check(transcripts, out["mentions"])
         out["mentions"].unpersist()   # last consumer of the cached delta
-        n_turns = transcripts.count()
         elapsed = time.time() - t0
         print(json.dumps({
             "turns_appended": n_turns,
@@ -223,7 +286,6 @@ def main() -> None:
     )
 
     violations = metrics.mention_span_check(transcripts, out["mentions"])
-    n_turns = transcripts.count()
     n_triples = out["triples"].count()
     elapsed = time.time() - t0
     print(json.dumps({

@@ -10,6 +10,8 @@ table.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kgnorm import schemas
@@ -347,11 +349,24 @@ def mention_span_check(transcripts: DataFrame, mentions: DataFrame) -> int:
     return bad.count()
 
 
-def turn_order_check(transcripts: DataFrame) -> int:
-    """Stable turn ordering: (conv_id, turn_idx) must be unique. Returns dup count."""
-    return (
+class TurnOrder(NamedTuple):
+    turns: int
+    duplicate_keys: int
+
+
+def turn_order_check(transcripts: DataFrame) -> TurnOrder:
+    """Stable turn ordering: (conv_id, turn_idx) must be unique.
+
+    One query returns the turn count with the duplicate-key count, so a
+    caller needs no second scan to count its input.
+    """
+    row = (
         transcripts.groupBy("conv_id", "turn_idx")
         .count()
-        .filter(F.col("count") > 1)
-        .count()
+        .agg(
+            F.coalesce(F.sum("count"), F.lit(0)).alias("turns"),
+            F.count_if(F.col("count") > 1).alias("duplicate_keys"),
+        )
+        .first()
     )
+    return TurnOrder(row.turns, row.duplicate_keys)

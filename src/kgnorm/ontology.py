@@ -166,17 +166,31 @@ def all_entries_linked(ontology: Ontology) -> bool:
     return all(cid is not None and cid > 0 for _k, (_s, _d, cid) in ontology.dictionary)
 
 
+def _local_df(spark: SparkSession, rows: list[dict], schema) -> DataFrame:
+    """Driver-held rows as a ``LocalTableScan``, through an Arrow table.
+
+    ``createDataFrame(list)`` plans a parallelized Python RDD, so every
+    scan of these small dimension tables would boot Python workers; an
+    Arrow table becomes a local relation whatever the session's Arrow
+    conf, and its known size lets the planner broadcast it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
+
+
 def concepts_df(spark: SparkSession, ontology: Ontology) -> DataFrame:
-    return spark.createDataFrame(ontology.concepts, schema=schemas.CONCEPTS)
+    return _local_df(spark, ontology.concepts, schemas.CONCEPTS)
 
 
 def synonyms_df(spark: SparkSession, ontology: Ontology) -> DataFrame:
-    return spark.createDataFrame(ontology.synonyms, schema=schemas.CONCEPT_SYNONYMS)
+    return _local_df(spark, ontology.synonyms, schemas.CONCEPT_SYNONYMS)
 
 
 def relationships_df(spark: SparkSession, ontology: Ontology) -> DataFrame:
-    rows = ontology.relationships or []
-    return spark.createDataFrame(rows, schema=schemas.CONCEPT_RELATIONSHIPS)
+    return _local_df(spark, ontology.relationships, schemas.CONCEPT_RELATIONSHIPS)
 
 
 def broadcast_dictionary(spark: SparkSession, ontology: Ontology):

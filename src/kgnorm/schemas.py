@@ -63,6 +63,10 @@ MENTION_STRUCT = T.StructType([
 ])
 
 # Exploded mentions stage table (models/mention.py:11-85 + provenance keys).
+# Row order is unspecified: partitioning decides it, and within a batch
+# extract.factorized_batch_assemble groups rows by distinct text, not input
+# order.  Consumers that need an order sort by (conv_id, turn_idx,
+# start_offset).
 MENTIONS = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),

@@ -111,3 +111,24 @@ def test_canonicalize_facts_split_equals_monolithic_reagg(spark):
     # and the untouched fact must actually be there, untouched
     untouched = [r for r in got if r[1] == 555]
     assert len(untouched) == 1 and untouched[0][8] == 1
+
+
+def test_four_hop_chain_converges_to_terminal(spark):
+    rels = _rels(spark, [(500, 400, "Maps to"), (400, 300, "Maps to"),
+                         (300, 200, "Maps to"), (200, 1, "Maps to")])
+    got = {r.concept_id: r.canonical_concept_id for r in canon.canonical_mapping(rels).collect()}
+    assert got == {500: 1, 400: 1, 300: 1, 200: 1}
+
+
+def test_known_row_count_equals_counted_path(spark, ontology_bundle):
+    from kgnorm import ontology
+
+    rels = ontology.relationships_df(spark, ontology_bundle)
+    counted = sorted(canon.canonical_mapping(rels).collect())
+    given = sorted(canon.canonical_mapping(
+        rels, n_rel=len(ontology_bundle.relationships)).collect())
+    assert counted and given == counted
+
+
+def test_no_alias_rows_gives_empty_mapping(spark):
+    assert canon.canonical_mapping(_rels(spark, []), n_rel=0).collect() == []

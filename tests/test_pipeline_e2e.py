@@ -85,7 +85,19 @@ def test_negated_pneumonia_triple_emitted_absent(golden_result):
 def test_span_invariant_holds(spark, golden_result):
     transcripts, out = golden_result
     assert metrics.mention_span_check(transcripts, out["mentions"]) == 0
-    assert metrics.turn_order_check(transcripts) == 0
+    order = metrics.turn_order_check(transcripts)
+    assert order.duplicate_keys == 0
+    assert order.turns == transcripts.count()
+
+
+def test_turn_order_check_counts_duplicate_keys(spark):
+    transcripts = spark.createDataFrame(
+        [("C1", 0, "a"), ("C1", 1, "b"), ("C1", 1, "c"), ("C2", 0, "d"),
+         ("C2", 0, "e"), ("C2", 0, "f")],
+        "conv_id string, turn_idx int, text string",
+    )
+    assert metrics.turn_order_check(transcripts) == (6, 2)
+    assert metrics.turn_order_check(transcripts.limit(0)) == (0, 0)
 
 
 def test_confidences_in_range_and_merged(golden_result):
