@@ -18,6 +18,7 @@ Environment mirrors bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
@@ -97,9 +98,8 @@ def main() -> None:
         plans["flagship_kg_triples"] = q["kg_triples"](spark, sf_dir)
         for name, df in plans.items():
             path = os.path.join(args.plans, f"{name}_{args.suffix}.txt")
-            with open(path, "w") as fh:
-                fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
+            with open(path, "w") as fh, contextlib.redirect_stdout(fh):
+                df.explain("formatted")
             print("wrote", path)
         spark.stop()
         return

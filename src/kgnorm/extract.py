@@ -22,7 +22,7 @@ process-singleton vocabulary (backend/app/services/vocabulary.py:346-370).
 
 The input ``text`` column is never mutated: mentions carry offsets into
 the original text, and the per-turn text-equality invariant is asserted
-by :func:`kgnorm.metrics.text_equality_check`.
+by :func:`kgnorm.metrics.mention_span_check`.
 """
 
 from __future__ import annotations
@@ -145,7 +145,8 @@ def extract_mentions_df(
             parallelism, applied with ``coalesce`` (no shuffle; the
             input keeps its own count when lower).  Default: the AQE
             ``REBALANCE(conv_id)`` path at
-            ``spark.sql.shuffle.partitions``.
+            ``spark.sql.shuffle.partitions``; with AQE off, which drops
+            that hint, ``repartition(n, "conv_id")``.
     """
     spark = transcripts.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -197,7 +198,9 @@ def extract_mentions_df(
         # collapses exactly as before.  Inputs with FEWER partitions
         # than the cap keep their own (coalesce never raises the count).
         partitioned = sel.coalesce(num_partitions)
-    elif sel.isStreaming:
+    elif sel.isStreaming or spark.conf.get("spark.sql.adaptive.enabled").lower() != "true":
+        # the REBALANCE hint is dropped without AQE (streaming queries
+        # always run without it): an explicit repartition keeps the balance
         partitioned = sel.repartition(n, "conv_id")
     else:
         # default batch path: REBALANCE(conv_id) keeps conversations

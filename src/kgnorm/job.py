@@ -40,7 +40,7 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from kgnorm import canon, extract, facts as facts_mod, graph, link, metrics, ontology, synth
+from kgnorm import canon, extract, facts as facts_mod, graph, link, metrics, ontology, schemas, synth
 from kgnorm.checkpoints import StageStore
 
 BRANCH_THREAD = "kgnorm-branch"
@@ -185,8 +185,16 @@ def run_append(
     tables equal a full batch rerun over all turns ever appended
     (tests/test_job_append.py pins it).
 
-    ``out["mentions"]`` is returned PERSISTED (it fed both the facts
-    upsert and the triples projection); callers must ``unpersist()`` it
+    The upsert returns the delta's bucket ids; the triples refresh reads
+    just those ``_bucket`` directories (static partition pruning) and
+    writes them spread over the session's cores
+    (facts.write_bucketed), one file per bucket.  A delta with no facts
+    rewrites nothing.  Both tables are read with their known schemas.
+
+    Returns ``{"mentions", "facts", "triples"}``: the delta's mentions
+    and the whole merged facts and triples tables (without ``_bucket``).
+    ``out["mentions"]`` is returned PERSISTED (the facts upsert and the
+    caller's span check both read it); callers must ``unpersist()`` it
     when done — a long-lived session issuing sequential appends would
     otherwise accumulate cached mention partitions (the CLI does this
     after its span check).
@@ -206,31 +214,28 @@ def run_append(
     fi = facts_mod.mention_facts_input(mentions, link.top_candidates(candidates))
 
     facts_dir = os.path.join(output, "facts_bucketed")
-    facts_mod.upsert_facts_parquet(spark, facts_dir, fi, n_buckets=n_buckets)
-    bucketed = spark.read.parquet(facts_dir)
+    touched = facts_mod.upsert_facts_parquet(spark, facts_dir, fi, n_buckets=n_buckets)
+    bucketed = facts_mod.read_bucketed(spark, facts_dir, schemas.FACTS)
 
     # triples projection maintained incrementally too: rebuild ONLY the
     # buckets the delta touched (bucket = f(conv_id) and the graph
     # window is conv-scoped, so per-bucket projection is exact) and
     # dynamically overwrite those partitions
-    hot = (
-        fi.select(facts_mod.bucket_col(n_buckets).alias("_bucket")).distinct()
-    )
-    touched = bucketed.join(F.broadcast(hot), "_bucket", "left_semi")
-    # no read/overwrite cycle here: the plan reads facts_bucketed and
-    # writes triples_bucketed
-    triples = (
-        graph.build_triples(touched.drop("_bucket"))
-        .withColumn("_bucket", facts_mod.bucket_col(n_buckets))
-    )
     triples_dir = os.path.join(output, "triples_bucketed")
-    with facts_mod._partition_overwrite(spark, "dynamic"):
-        triples.write.mode("overwrite").partitionBy("_bucket").parquet(triples_dir)
+    if touched:
+        # no read/overwrite cycle here: the plan reads facts_bucketed and
+        # writes triples_bucketed
+        triples = (
+            graph.build_triples(bucketed.filter(F.col("_bucket").isin(touched)).drop("_bucket"))
+            .withColumn("_bucket", facts_mod.bucket_col(n_buckets))
+        )
+        with facts_mod._partition_overwrite(spark, "dynamic"):
+            facts_mod.write_bucketed(triples, triples_dir, len(touched))
 
     return {
         "mentions": mentions,
         "facts": bucketed.drop("_bucket"),
-        "triples": spark.read.parquet(triples_dir).drop("_bucket"),
+        "triples": facts_mod.read_bucketed(spark, triples_dir, schemas.TRIPLES).drop("_bucket"),
     }
 
 
@@ -246,7 +251,10 @@ def main() -> None:
     p.add_argument("--append", action="store_true",
                    help="treat the input as NEWLY-ARRIVED turns and MERGE their "
                         "facts into <output>/facts_bucketed instead of rebuilding")
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument("--partitions", type=int, default=None,
+                   help="cap on extraction parallelism, applied with coalesce: "
+                        "never raises the input's partition count, and also "
+                        "limits the input scan's tasks")
     args = p.parse_args()
 
     spark = get_spark("kgnorm-job")

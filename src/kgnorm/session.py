@@ -79,6 +79,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # list partitioned tables of up to 1024 directories on the driver
+        # (a 64-bucket read would otherwise launch a listing job); driver
+        # listing is sequential, which is slow on high-latency object stores
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")

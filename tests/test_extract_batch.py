@@ -9,6 +9,9 @@ duplicate-heavy, all-distinct, None-text and memo-off conditions.
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 from kgnorm import ac, ontology, rules, schemas
 from kgnorm.extract import extract_mentions_df
 
@@ -71,3 +74,30 @@ def test_batch_kernel_all_none_texts(spark):
     ont = ontology.load_fixture_ontology()
     turns = [("C000", 0, None), ("C000", 1, None)]
     assert _run(spark, turns, ont) == []
+
+
+def _physical_plan(df):
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        df.explain()
+    return out.getvalue()
+
+
+def test_extraction_balanced_with_and_without_aqe(spark):
+    """The default path's REBALANCE hint needs AQE; with AQE off,
+    extraction hash-partitions by conv_id explicitly instead."""
+    from kgnorm.session import conf_override
+
+    ont = ontology.load_fixture_ontology()
+    df = spark.createDataFrame(
+        [{"conv_id": c, "turn_idx": t, "role": "user", "text": x,
+          "tool": "", "ts": None} for c, t, x in _turns(ont)],
+        schema=schemas.TRANSCRIPTS,
+    )
+    d = ontology.broadcast_dictionary(spark, ont)
+    plan = _physical_plan(extract_mentions_df(df, d))
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan
+    with conf_override(spark, "spark.sql.adaptive.enabled", "false"):
+        plan = _physical_plan(extract_mentions_df(df, d))
+    assert "REBALANCE_PARTITIONS_BY_COL" not in plan
+    assert plan.index("MapInPandas") < plan.index("Exchange hashpartitioning(conv_id")

@@ -274,11 +274,14 @@ def test_upsert_empty_delta_is_noop(spark, tmp_path):
 
     facts_dir = str(tmp_path / "facts")
     all_inputs = _many_inputs(spark)
-    facts_mod.upsert_facts_parquet(
-        spark, facts_dir, all_inputs.filter(F.col("turn_idx") < 5), n_buckets=8)
+    first = all_inputs.filter(F.col("turn_idx") < 5)
+    # the upsert returns the sorted buckets of the delta's conversations
+    touched = facts_mod.upsert_facts_parquet(spark, facts_dir, first, n_buckets=8)
+    assert touched == sorted(
+        {r.b for r in first.select(facts_mod.bucket_col(8).alias("b")).collect()})
     before = _canon(spark.read.parquet(facts_dir).drop("_bucket"))
-    facts_mod.upsert_facts_parquet(
-        spark, facts_dir, all_inputs.filter(F.lit(False)), n_buckets=8)
+    assert facts_mod.upsert_facts_parquet(
+        spark, facts_dir, all_inputs.filter(F.lit(False)), n_buckets=8) == []
     assert _canon(spark.read.parquet(facts_dir).drop("_bucket")) == before
     assert not os.path.exists(str(tmp_path / "facts__staging"))
 

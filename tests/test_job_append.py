@@ -1,6 +1,9 @@
 """--append CLI mode: sequential incremental appends must converge to
 the same facts a single full batch run produces."""
 
+import inspect
+import os
+
 from pyspark.sql import functions as F
 
 from kgnorm import facts as facts_mod, job, link, ontology, synth
@@ -28,6 +31,14 @@ def _canon(df):
     )
 
 
+def _bucket_files(table_dir):
+    """Parquet file names under each ``_bucket=`` directory of a table."""
+    return {
+        d: [f for f in os.listdir(os.path.join(table_dir, d)) if f.endswith(".parquet")]
+        for d in os.listdir(table_dir) if d.startswith("_bucket=")
+    }
+
+
 def test_two_appends_equal_one_batch(spark, tmp_path, ontology_bundle):
     from kgnorm import graph
 
@@ -51,3 +62,16 @@ def test_two_appends_equal_one_batch(spark, tmp_path, ontology_bundle):
         (t.conv_id, t.subj, t.pred, t.obj, t.assertion)
         for t in graph.build_triples(expected).collect())
     assert got_triples == exp_triples
+    for table in ("facts_bucketed", "triples_bucketed"):
+        files = _bucket_files(os.path.join(out_dir, table))
+        assert files and all(len(f) == 1 for f in files.values()), files
+        # part-<task>-...: the buckets were written by more than one task
+        assert len({f[0].split("-")[1] for f in files.values()}) > 1, files
+
+
+def test_bucketed_tables_list_on_the_driver(spark):
+    """A read of a table with the default bucket count lists its
+    directories on the driver instead of launching a listing job."""
+    n_buckets = inspect.signature(job.run_append).parameters["n_buckets"].default
+    threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    assert int(threshold) >= n_buckets
