@@ -4,7 +4,9 @@
 optimization rounds can (a) time one pipeline stage at a time with the
 noop sink (so we measure the computation, not the sink or a count's
 column pruning), and (b) dump ``.explain("formatted")`` for every stage
-to ``plans/<tag>/<stage>_<suffix>.txt`` for the plan-diff evidence.
+to ``plans/<tag>/<stage>_<suffix>.txt`` for the plan-diff evidence
+(the four text kernels are captured on their default partition choice,
+and again with AQE off as ``<kernel>_aqe_off``).
 
 Usage::
 
@@ -29,9 +31,9 @@ sys.path.insert(0, os.path.join(REPO, "src"))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from kgnorm import canon, facts as facts_mod, graph, link, ontology, synth  # noqa: E402
+from kgnorm import advanced, canon, ensemble, facts as facts_mod, graph, link, ontology, patterns, synth  # noqa: E402
 from kgnorm.extract import extract_mentions_df  # noqa: E402
-from kgnorm.session import get_spark  # noqa: E402
+from kgnorm.session import conf_override, get_spark  # noqa: E402
 
 
 def noop(df) -> float:
@@ -80,10 +82,27 @@ def main() -> None:
     # ------------------------------------------------------------------
     if args.plans:
         os.makedirs(args.plans, exist_ok=True)
-        m = mentions_df()
-        f_ = facts_df(m)
+
+        def write_plan(name, df):
+            path = os.path.join(args.plans, f"{name}_{args.suffix}.txt")
+            with open(path, "w") as fh, contextlib.redirect_stdout(fh):
+                df.explain("formatted")
+            print("wrote", path)
+
+        # the four text kernels on their default partition choice
+        kernels = {
+            "extract": lambda: extract_mentions_df(transcripts, dictionary),
+            "advanced": lambda: advanced.enhanced_mentions_df(transcripts, dictionary),
+            "ensemble": lambda: ensemble.ensemble_mentions_df(transcripts, dictionary),
+            "patterns": lambda: patterns.pattern_entities_df(transcripts),
+        }
+        for name, build in kernels.items():
+            write_plan(name, build())
+        with conf_override(spark, "spark.sql.adaptive.enabled", "false"):
+            for name, build in kernels.items():
+                write_plan(f"{name}_aqe_off", build())
+        f_ = facts_df(mentions_df())
         plans = {
-            "extract": m,
             "facts": f_,
             "graph_first_facts": graph.first_facts(f_),
             "graph_triples": graph.build_triples(f_),
@@ -97,10 +116,7 @@ def main() -> None:
         q = entrymod.queries()
         plans["flagship_kg_triples"] = q["kg_triples"](spark, sf_dir)
         for name, df in plans.items():
-            path = os.path.join(args.plans, f"{name}_{args.suffix}.txt")
-            with open(path, "w") as fh, contextlib.redirect_stdout(fh):
-                df.explain("formatted")
-            print("wrote", path)
+            write_plan(name, df)
         spark.stop()
         return
 

@@ -18,9 +18,10 @@ Port of ``backend/app/services/nlp_advanced.py``:
 
 All tables live in ``data/nlp_advanced_tables.json`` (extracted
 verbatim, provenance in the header).  Pure Python over (text, mention)
-— deployed like the other kernels: Arrow-batched ``mapInPandas`` with
-per-worker compiled-pattern caching, reusing the extraction stage's
-mention pass so enhancement adds no extra scan of the text.
+— deployed like the other kernels through
+:func:`kgnorm.extract.text_kernel_df` (per-worker compiled-pattern
+caching), reusing the extraction stage's mention pass so enhancement
+adds no extra scan of the text.
 """
 
 from __future__ import annotations
@@ -29,8 +30,9 @@ import json
 import os
 import re
 from dataclasses import dataclass
-from typing import Iterator
 
+from kgnorm import rules
+from kgnorm.extract import _automaton_for, text_kernel_df, transpose_rows
 from kgnorm.ontology import DATA_DIR
 
 ABBREV_WINDOW = 100   # nlp_advanced.py:108
@@ -255,56 +257,28 @@ def enhanced_mentions_df(transcripts, dictionary, num_partitions: int | None = N
     Arrow pass (extraction and enhancement share the text scan).
     Assertion flips to 'absent' on clause-negation detection, as the
     reference does (nlp_advanced.py:788-790)."""
-    import pandas as pd
-
-    from kgnorm import rules
-    from kgnorm.extract import _automaton_for
-
-    spark = transcripts.sparkSession
     # tables ride a broadcast — the data file is driver-local only
-    tables_bc = spark.sparkContext.broadcast(_load_tables())
+    tables_bc = transcripts.sparkSession.sparkContext.broadcast(_load_tables())
 
-    def batch_fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from kgnorm.extract import factorized_batch_assemble, transpose_rows
+    def make_block():
+        auto = _automaton_for(dictionary.value)
+        tables = compile_tables(tables_bc.value)
 
-        auto = None
-        tables = None
-        memo: dict[str, tuple] = {}
+        def block(text):
+            rows = []
+            for m in rules.extract_mentions(text, auto):
+                e = enhance(text, m.text, m.start_offset, m.end_offset, tables)
+                assertion = "absent" if e.negated else m.assertion
+                rows.append((
+                    m.text, m.start_offset, m.end_offset, assertion,
+                    m.domain_hint, int(m.omop_concept_id or 0),
+                    e.disambiguated_term, e.disambiguation_context,
+                    e.negated, e.negation_trigger,
+                    e.linked_modifier, e.compound_condition_text,
+                    e.base_condition, e.laterality, e.laterality_text,
+                ))
+            return transpose_rows(rows, len(ENHANCED_COLS) - 2)
+        return block
 
-        def block_for(text):
-            entry = memo.get(text)
-            if entry is None:
-                rows = []
-                for m in rules.extract_mentions(text, auto):
-                    e = enhance(text, m.text, m.start_offset, m.end_offset, tables)
-                    assertion = "absent" if e.negated else m.assertion
-                    rows.append((
-                        m.text, m.start_offset, m.end_offset, assertion,
-                        m.domain_hint, int(m.omop_concept_id or 0),
-                        e.disambiguated_term, e.disambiguation_context,
-                        e.negated, e.negation_trigger,
-                        e.linked_modifier, e.compound_condition_text,
-                        e.base_condition, e.laterality, e.laterality_text,
-                    ))
-                entry = transpose_rows(rows, len(ENHANCED_COLS) - 2)
-                if len(memo) >= 50_000:
-                    memo.clear()
-                memo[text] = entry
-            return entry
-
-        for batch in batches:
-            if auto is None:
-                auto = _automaton_for(dictionary.value)
-                tables = compile_tables(tables_bc.value)
-            yield factorized_batch_assemble(batch, ENHANCED_COLS, block_for)
-
-    sel = transcripts.select("conv_id", "turn_idx", "text")
-    # r6 (guide §2.4/§8, same treatment as kgnorm.extract): an explicit
-    # num_partitions caps parallelism via coalesce (no text shuffle);
-    # otherwise the AQE REBALANCE hint balances arbitrary inputs without
-    # a strict full-width hash exchange of the turn text.
-    if num_partitions:
-        partitioned = sel.coalesce(num_partitions)
-    else:
-        partitioned = sel.hint("rebalance", "conv_id")
-    return partitioned.mapInPandas(batch_fn, schema=ENHANCED_SCHEMA)
+    return text_kernel_df(transcripts, ENHANCED_COLS, ENHANCED_SCHEMA,
+                          make_block, num_partitions)

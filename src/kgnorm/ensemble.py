@@ -29,17 +29,17 @@ without an ml_ner source, exactly as in the reference.
 
 Spark shape: the merge is a per-turn sequential algorithm over a handful
 of mentions, so the whole ensemble (three extractors + merge) runs as ONE
-Arrow-batched ``mapInPandas`` pass per turn — no join and no shuffle
-between sources, which at 10^12 turns saves two full mention-stream
-shuffles versus merging materialized per-source tables.
+text-kernel pass per turn (:func:`kgnorm.extract.text_kernel_df`) — no
+join and no shuffle between sources, which at 10^12 turns saves two full
+mention-stream shuffles versus merging materialized per-source tables.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 from kgnorm import patterns, pyvalues, rules
+from kgnorm.extract import _automaton_for, text_kernel_df, transpose_rows
 
 MIN_CONFIDENCE = 0.5          # nlp_ensemble.py:49
 RULE_BASED_CONFIDENCE = 0.85  # :50
@@ -188,47 +188,20 @@ ENSEMBLE_SCHEMA = (
 
 
 def ensemble_mentions_df(transcripts, dictionary, num_partitions: int | None = None):
-    """Transcripts → merged ensemble mentions.  One narrow mapInPandas
+    """Transcripts → merged ensemble mentions.  One text-kernel
     pass; the dictionary travels as the same broadcast the extraction
     stage uses (per-worker automaton cache in kgnorm.extract)."""
-    import pandas as pd
+    def make_block():
+        auto = _automaton_for(dictionary.value)
 
-    from kgnorm.extract import _automaton_for
+        def block(text):
+            rows = [
+                (m.source, m.text, m.lexical_variant, m.start_offset,
+                 m.end_offset, m.domain, m.confidence)
+                for m in ensemble_for_text(text, auto)
+            ]
+            return transpose_rows(rows, len(ENSEMBLE_COLS) - 2)
+        return block
 
-    spark = transcripts.sparkSession
-
-    def batch_fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from kgnorm.extract import factorized_batch_assemble, transpose_rows
-
-        auto = None
-        memo: dict[str, tuple] = {}
-
-        def block_for(text):
-            entry = memo.get(text)
-            if entry is None:
-                rows = [
-                    (m.source, m.text, m.lexical_variant, m.start_offset,
-                     m.end_offset, m.domain, m.confidence)
-                    for m in ensemble_for_text(text, auto)
-                ]
-                entry = transpose_rows(rows, len(ENSEMBLE_COLS) - 2)
-                if len(memo) >= 50_000:
-                    memo.clear()
-                memo[text] = entry
-            return entry
-
-        for batch in batches:
-            if auto is None:
-                auto = _automaton_for(dictionary.value)
-            yield factorized_batch_assemble(batch, ENSEMBLE_COLS, block_for)
-
-    sel = transcripts.select("conv_id", "turn_idx", "text")
-    # r6 (guide §2.4/§8, same treatment as kgnorm.extract): an explicit
-    # num_partitions caps parallelism via coalesce (no text shuffle);
-    # otherwise the AQE REBALANCE hint balances arbitrary inputs without
-    # a strict full-width hash exchange of the turn text.
-    if num_partitions:
-        partitioned = sel.coalesce(num_partitions)
-    else:
-        partitioned = sel.hint("rebalance", "conv_id")
-    return partitioned.mapInPandas(batch_fn, schema=ENSEMBLE_SCHEMA)
+    return text_kernel_df(transcripts, ENSEMBLE_COLS, ENSEMBLE_SCHEMA,
+                          make_block, num_partitions)

@@ -1,14 +1,19 @@
 """Mention extraction stage: transcripts → mentions.
 
-Spark plan (r6)::
+Spark plan (r6), shared by every per-turn text kernel through
+:func:`text_kernel_df`::
 
     transcripts
-      .coalesce(N) / REBALANCE hint     # parallelism cap WITHOUT shuffling
-                                        # the raw text (stateless per-turn
-                                        # UDF needs no co-location); default
-                                        # path keeps the AQE rebalance for
-                                        # arbitrary, possibly skewed inputs
-      .mapInPandas(extract_batch)       # Arrow-batched; factorized to
+      .coalesce(N)                      # num_partitions given: parallelism
+                                        # cap WITHOUT shuffling the raw text
+                                        # (stateless per-turn UDF needs no
+                                        # co-location)
+      | .hint("rebalance", "conv_id")   # default batch path: the AQE
+                                        # rebalance for arbitrary, possibly
+                                        # skewed inputs
+      | .repartition(n, "conv_id")      # streaming input or AQE off, both
+                                        # of which drop the hint
+      .mapInPandas                      # Arrow-batched; factorized to
                                         # distinct texts per batch: AC scan +
                                         # section parse + context rules once
                                         # per distinct text, vectorized
@@ -27,13 +32,13 @@ by :func:`kgnorm.metrics.mention_span_check`.
 
 from __future__ import annotations
 
-import os
-from typing import Any, Iterator
+from functools import partial
+from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.broadcast import Broadcast
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from kgnorm import ac, rules, schemas
 
@@ -42,8 +47,9 @@ from kgnorm import ac, rules, schemas
 _AUTOMATON_CACHE: dict[int, Any] = {}
 
 _MENTION_COLS = [f.name for f in schemas.MENTIONS.fields]
-# mention-level columns (everything but the conv_id/turn_idx provenance)
-_MENTION_ONLY_COLS = _MENTION_COLS[2:]
+
+# Per-worker memo bound of :func:`text_kernel_df`, in distinct texts.
+MEMO_CAP = 50_000
 
 
 def transpose_rows(rows: list[tuple], n_cols: int) -> tuple[int, tuple]:
@@ -97,6 +103,83 @@ def factorized_batch_assemble(batch, all_cols: list[str], block_for) -> pd.DataF
     return pd.DataFrame(out, columns=all_cols)
 
 
+def text_kernel_df(
+    transcripts: DataFrame,
+    cols: list[str],
+    schema,
+    make_block: Callable[[], Callable[[str], tuple[int, tuple]]],
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """The one Arrow-batched stage behind every per-turn text kernel.
+
+    ``make_block()`` runs on the worker when a task's first batch
+    arrives (read broadcasts, build automata there) and returns
+    ``block(text) -> (k, per-column lists)``, a pure function of the
+    text.  ``cols``/``schema`` describe the output rows, provenance
+    ``conv_id, turn_idx`` first.  ``num_partitions`` caps parallelism
+    with ``coalesce``; the default path is ``REBALANCE(conv_id)``, or
+    ``repartition(shuffle.partitions, "conv_id")`` when the hint would
+    be dropped (AQE off, streaming input).
+    """
+    spark = transcripts.sparkSession
+    # read on the driver, so the closure carries it to the workers
+    memo_cap = MEMO_CAP
+
+    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        block = None
+        # per-worker memo of text → block.
+        # Agent-transcript corpora repeat turn texts heavily (tool
+        # banners, boilerplate, canned replies); every kernel is a pure
+        # function of the text, so each distinct string is processed
+        # once per worker.  Bounded to keep the worker's footprint flat
+        # on high-cardinality corpora.
+        memo: dict[str, tuple[int, tuple]] = {}
+
+        def block_for(text):
+            entry = memo.get(text)
+            if entry is None:
+                entry = block(text)
+                if len(memo) >= memo_cap:
+                    memo.clear()
+                memo[text] = entry
+            return entry
+
+        for batch in batches:
+            if block is None:
+                block = make_block()
+            yield factorized_batch_assemble(batch, cols, block_for)
+
+    sel = transcripts.select("conv_id", "turn_idx", "text")
+    if num_partitions:
+        # explicit cap (bench scaling legs, job --partitions).
+        # r6 (guide §2.4): coalesce instead of a hash repartition — the
+        # cap semantics (≤ num_partitions concurrent tasks) hold without
+        # shuffling the text payload, which was the single largest
+        # exchange of the whole pipeline (~190 B/turn of raw text moved
+        # only to be consumed by a stateless per-turn UDF one stage
+        # later).  Synthetic/range inputs are evenly sized, so merging
+        # adjacent partitions stays balanced; conversations remain
+        # contiguous, so downstream map-side partial aggregation
+        # collapses exactly as before.  Inputs with FEWER partitions
+        # than the cap keep their own (coalesce never raises the count).
+        partitioned = sel.coalesce(num_partitions)
+    elif sel.isStreaming or spark.conf.get("spark.sql.adaptive.enabled").lower() != "true":
+        # the REBALANCE hint is dropped without AQE (streaming queries
+        # always run without it): an explicit repartition keeps the balance
+        n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        partitioned = sel.repartition(n, "conv_id")
+    else:
+        # default batch path: REBALANCE(conv_id) keeps conversations
+        # co-located (map-side combine stays total downstream) but,
+        # unlike a strict repartition, licenses AQE to SPLIT a
+        # pathologically hot conversation across tasks
+        # (optimizeSkewsInRebalancePartitions) — harmless here because
+        # every kernel is stateless per turn and the facts groupBy
+        # re-shuffles on the full fact key anyway
+        partitioned = sel.hint("rebalance", "conv_id")
+    return partitioned.mapInPandas(batch_fn, schema=schema)
+
+
 def _mention_lists(text: str, auto) -> tuple[int, tuple]:
     """Extract ``text`` once and freeze the result as one plain list per
     mention column (the memo value): replication across duplicate turns
@@ -142,73 +225,10 @@ def extract_mentions_df(
         dictionary: broadcast list of AC entries from
             :func:`kgnorm.ontology.broadcast_dictionary`.
         num_partitions: explicit CAP on the extraction stage's
-            parallelism, applied with ``coalesce`` (no shuffle; the
-            input keeps its own count when lower).  Default: the AQE
-            ``REBALANCE(conv_id)`` path at
-            ``spark.sql.shuffle.partitions``; with AQE off, which drops
-            that hint, ``repartition(n, "conv_id")``.
+            parallelism (see :func:`text_kernel_df`).
     """
-    spark = transcripts.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    def make_block():
+        return partial(_mention_lists, auto=_automaton_for(dictionary.value))
 
-    def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        auto = None
-        # per-worker memo of text → extracted mention arrays.
-        # Agent-transcript corpora repeat turn texts heavily (tool
-        # banners, boilerplate, canned replies); extraction is a pure
-        # function of the text, so each distinct string is scanned once
-        # per worker.  Bounded to keep the worker's footprint flat on
-        # high-cardinality corpora.
-        #
-        # r6 (guide §4.2): the batch is factorized to its distinct
-        # texts; the Python row loop runs only over DISTINCT texts and
-        # the replication back to turn rows is vectorized numpy
-        # (repeat + gather), so duplicate-heavy batches cost
-        # O(distinct · scan + total_mentions · memcpy) instead of a
-        # 50M-iteration append loop.
-        memo_enabled = not os.environ.get("KGNORM_NO_MEMO")
-        memo: dict[str, tuple[int, tuple]] = {}
-        memo_cap = 50_000 if memo_enabled else 0
-        def block_for(text):
-            entry = memo.get(text) if memo_enabled else None
-            if entry is None:
-                entry = _mention_lists(text, auto)
-                if memo_enabled:
-                    if len(memo) >= memo_cap:
-                        memo.clear()
-                    memo[text] = entry
-            return entry
-
-        for batch in batches:
-            if auto is None:
-                auto = _automaton_for(dictionary.value)
-            yield factorized_batch_assemble(batch, _MENTION_COLS, block_for)
-
-    sel = transcripts.select("conv_id", "turn_idx", "text")
-    if num_partitions:
-        # explicit cap (bench scaling legs, job --partitions).
-        # r6 (guide §2.4): coalesce instead of a hash repartition — the
-        # cap semantics (≤ num_partitions concurrent tasks) hold without
-        # shuffling the text payload, which was the single largest
-        # exchange of the whole pipeline (~190 B/turn of raw text moved
-        # only to be consumed by a stateless per-turn UDF one stage
-        # later).  Synthetic/range inputs are evenly sized, so merging
-        # adjacent partitions stays balanced; conversations remain
-        # contiguous, so downstream map-side partial aggregation
-        # collapses exactly as before.  Inputs with FEWER partitions
-        # than the cap keep their own (coalesce never raises the count).
-        partitioned = sel.coalesce(num_partitions)
-    elif sel.isStreaming or spark.conf.get("spark.sql.adaptive.enabled").lower() != "true":
-        # the REBALANCE hint is dropped without AQE (streaming queries
-        # always run without it): an explicit repartition keeps the balance
-        partitioned = sel.repartition(n, "conv_id")
-    else:
-        # default batch path: REBALANCE(conv_id) keeps conversations
-        # co-located (map-side combine stays total downstream) but,
-        # unlike a strict repartition, licenses AQE to SPLIT a
-        # pathologically hot conversation across tasks
-        # (optimizeSkewsInRebalancePartitions) — harmless here because
-        # extraction is stateless per turn and the facts groupBy
-        # re-shuffles on the full fact key anyway
-        partitioned = sel.hint("rebalance", "conv_id")
-    return partitioned.mapInPandas(extract_batch, schema=schemas.MENTIONS)
+    return text_kernel_df(transcripts, _MENTION_COLS, schemas.MENTIONS,
+                          make_block, num_partitions)

@@ -9,7 +9,8 @@ application); the arrows are the only ordering::
     ontology ──→ alias closure ─────────────────────╮  (--canonicalize)
        ↓ dictionary, concepts                        │
     transcripts                                      │
-      → extract   (shuffle-free cap + broadcast-AC Arrow UDF)
+      → extract   (REBALANCE(conv_id), or a shuffle-free --partitions cap,
+                   + broadcast-AC Arrow UDF)
       → link      (broadcast dictionary direct path + tiered cascade)
       → facts     (5-part-key noisy-OR hash agg)     │
           ├──→ canonical_facts ←─────────────────────╯

@@ -17,23 +17,25 @@ Port of the reference's ``backend/app/services/extraction_pipeline.py``:
 The pattern tables are reference data ported verbatim (parity requires
 identical lexicons + confidences; each table cites its source lines).
 The executing code is a pure function of the text, deployed exactly like
-the dictionary-scan kernel: Arrow-batched ``mapInPandas`` with per-worker
-compiled-pattern caching and text memoization (agent transcripts repeat
-turn texts heavily).
+the dictionary-scan kernel through :func:`kgnorm.extract.text_kernel_df`
+(Arrow-batched ``mapInPandas``, one partition choice, per-worker text
+memo — agent transcripts repeat turn texts heavily) with per-worker
+compiled-pattern caching.
 
 Scale notes: the ~330 compiled regexes scan each text sequentially —
 O(patterns × text) per distinct text, amortized by the memo.  The Spark
-plan is a single narrow ``mapInPandas`` over the transcripts partitioning
-(no shuffle, no join); per-match confidences ride along as plain columns.
+plan is that one ``mapInPandas`` stage (no join); per-match confidences
+ride along as plain columns.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import Any
 
 from kgnorm import context as ctx
+from kgnorm.extract import text_kernel_df, transpose_rows
 from kgnorm.normalize import CONDITION_NORMALIZATION, DRUG_NORMALIZATION
 
 MIN_CONFIDENCE = 0.5  # extraction_pipeline.py:682
@@ -403,42 +405,16 @@ PATTERN_ENTITIES_SCHEMA = (
 
 
 def pattern_entities_df(transcripts, num_partitions: int | None = None):
-    """Transcripts → pattern-pipeline entities (Arrow-batched kernel,
-    same plan shape as kgnorm.extract.extract_mentions_df)."""
-    import pandas as pd
+    """Transcripts → pattern-pipeline entities (the same text-kernel
+    stage as kgnorm.extract.extract_mentions_df)."""
+    def block(text):
+        rows = [
+            (e.text, e.normalized_text, e.entity_type, e.start_offset,
+             e.end_offset, e.base_confidence, e.final_confidence,
+             e.assertion, e.section, e.value, e.unit)
+            for e in pipeline_entities(text)
+        ]
+        return transpose_rows(rows, len(PATTERN_ENTITY_COLS) - 2)
 
-    spark = transcripts.sparkSession
-
-    def batch_fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from kgnorm.extract import factorized_batch_assemble, transpose_rows
-
-        memo: dict[str, tuple] = {}
-
-        def block_for(text):
-            entry = memo.get(text)
-            if entry is None:
-                rows = [
-                    (e.text, e.normalized_text, e.entity_type, e.start_offset,
-                     e.end_offset, e.base_confidence, e.final_confidence,
-                     e.assertion, e.section, e.value, e.unit)
-                    for e in pipeline_entities(text)
-                ]
-                entry = transpose_rows(rows, len(PATTERN_ENTITY_COLS) - 2)
-                if len(memo) >= 50_000:
-                    memo.clear()
-                memo[text] = entry
-            return entry
-
-        for batch in batches:
-            yield factorized_batch_assemble(batch, PATTERN_ENTITY_COLS, block_for)
-
-    sel = transcripts.select("conv_id", "turn_idx", "text")
-    # r6 (guide §2.4/§8, same treatment as kgnorm.extract): an explicit
-    # num_partitions caps parallelism via coalesce (no text shuffle);
-    # otherwise the AQE REBALANCE hint balances arbitrary inputs without
-    # a strict full-width hash exchange of the turn text.
-    if num_partitions:
-        partitioned = sel.coalesce(num_partitions)
-    else:
-        partitioned = sel.hint("rebalance", "conv_id")
-    return partitioned.mapInPandas(batch_fn, schema=PATTERN_ENTITIES_SCHEMA)
+    return text_kernel_df(transcripts, PATTERN_ENTITY_COLS, PATTERN_ENTITIES_SCHEMA,
+                          lambda: block, num_partitions)
