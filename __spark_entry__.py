@@ -35,7 +35,7 @@ if SRC not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kgnorm import (
-    ensemble, export, facts as facts_mod, graph, link, metrics, multimodal,
+    ensemble, export, facts as facts_mod, graph, job, link, metrics, multimodal,
     normalize, ontology, patterns, pyvalues, rules, synth, textops, values, vecops,
 )
 from kgnorm.ac import build_automaton
@@ -117,23 +117,16 @@ def _stages(spark: SparkSession, sf_dir: str) -> dict:
     ont = _ont()
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     transcripts = synth.transcripts_from_documents(docs, TURNS_PER_CONV)
-    dictionary = ontology.broadcast_dictionary(spark, ont)
-    mentions = extract_mentions_df(transcripts, dictionary).persist()
-    concepts = ontology.concepts_df(spark, ont)
-    synonyms = ontology.synonyms_df(spark, ont)
-    candidates = link.link_mentions(
-        mentions, concepts, synonyms,
-        assume_all_direct=ontology.all_entries_linked(ont),
-    ).persist()
-    top = link.top_candidates(candidates)
-    facts = facts_mod.build_facts(facts_mod.mention_facts_input(mentions, top)).persist()
+    mentions, candidates, fi = job.fact_inputs(
+        spark, transcripts, ont, stage=lambda name, build: build().persist())
     out = {
         "transcripts": transcripts,
-        "dictionary": dictionary,
+        "dictionary": ontology.broadcast_dictionary(spark, ont),  # for the text-kernel queries
         "mentions": mentions,
         "candidates": candidates,
-        "top": top,
-        "facts": facts,
+        "top": link.top_candidates(candidates),
+        "fact_inputs": fi,
+        "facts": facts_mod.build_facts(fi).persist(),
     }
     _STAGE_CACHE[key] = out
     return out
@@ -260,8 +253,7 @@ def _q_facts_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from turns 0-2 then upserted with the later turns' evidences must
     equal the full batch build — shares kg_facts' full-batch oracle, the
     strongest possible check of the append-only MERGE path."""
-    s = _stages(spark, sf_dir)
-    fi = facts_mod.mention_facts_input(s["mentions"], s["top"])
+    fi = _stages(spark, sf_dir)["fact_inputs"]
     old = fi.filter(F.col("turn_idx") < 3)
     new = fi.filter(F.col("turn_idx") >= 3)
     merged = facts_mod.merge_facts(facts_mod.build_facts(old), new)
@@ -2053,8 +2045,7 @@ def _q_stream_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = (spark.sparkContext.applicationId, _sf_tag(sf_dir))
     if key not in _STATEFUL_DONE:
-        s = _stages(spark, sf_dir)
-        fi = facts_mod.mention_facts_input(s["mentions"], s["top"])
+        fi = _stages(spark, sf_dir)["fact_inputs"]
         base = os.path.join(
             tempfile.gettempdir(), f"kgnorm_sfacts_{_sf_tag(sf_dir)}_{os.getpid()}")
         shutil.rmtree(base, ignore_errors=True)

@@ -20,6 +20,7 @@ Environment mirrors bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
 from __future__ import annotations
 
 import argparse
+import collections
 import contextlib
 import json
 import os
@@ -31,7 +32,7 @@ sys.path.insert(0, os.path.join(REPO, "src"))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from kgnorm import advanced, canon, ensemble, facts as facts_mod, graph, link, ontology, patterns, synth  # noqa: E402
+from kgnorm import advanced, canon, ensemble, facts as facts_mod, graph, job, ontology, patterns, synth  # noqa: E402
 from kgnorm.extract import extract_mentions_df  # noqa: E402
 from kgnorm.session import conf_override, get_spark  # noqa: E402
 
@@ -59,23 +60,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     ont = ontology.load_fixture_ontology()
-    dictionary = ontology.broadcast_dictionary(spark, ont)
-    concepts = ontology.concepts_df(spark, ont)
-    synonyms = ontology.synonyms_df(spark, ont)
     relationships = ontology.relationships_df(spark, ont)
     transcripts = synth.synth_transcripts(spark, args.turns,
                                           unique_texts=args.unique_texts)
 
-    def mentions_df():
-        return extract_mentions_df(transcripts, dictionary, num_partitions=cpus * 2)
-
-    def candidates_df(m):
-        return link.link_mentions(m, concepts, synonyms,
-                                  assume_all_direct=ontology.all_entries_linked(ont))
-
-    def facts_df(m):
-        return facts_mod.build_facts(
-            facts_mod.mention_facts_input(m, link.top_candidates(candidates_df(m))))
+    def fact_inputs(stage=lambda name, build: build()):
+        return job.fact_inputs(spark, transcripts, ont, stage, num_partitions=cpus * 2)
 
     # ------------------------------------------------------------------
     # plan capture mode
@@ -90,6 +80,7 @@ def main() -> None:
             print("wrote", path)
 
         # the four text kernels on their default partition choice
+        dictionary = ontology.broadcast_dictionary(spark, ont)
         kernels = {
             "extract": lambda: extract_mentions_df(transcripts, dictionary),
             "advanced": lambda: advanced.enhanced_mentions_df(transcripts, dictionary),
@@ -101,7 +92,7 @@ def main() -> None:
         with conf_override(spark, "spark.sql.adaptive.enabled", "false"):
             for name, build in kernels.items():
                 write_plan(f"{name}_aqe_off", build())
-        f_ = facts_df(mentions_df())
+        f_ = facts_mod.build_facts(fact_inputs()[2])
         plans = {
             "facts": f_,
             "graph_first_facts": graph.first_facts(f_),
@@ -121,33 +112,30 @@ def main() -> None:
         return
 
     # ------------------------------------------------------------------
-    # per-stage noop timing (stage inputs persisted+materialized first,
-    # so each timing covers exactly one stage's computation)
+    # per-stage noop timing (each stage persisted and materialized by its
+    # own noop write, so each timing covers exactly one stage's
+    # computation)
     # ------------------------------------------------------------------
     stages = args.stages.split(",")
-    out: dict[str, list[float]] = {s: [] for s in stages}
+    out: dict[str, list[float]] = collections.defaultdict(list)
     sc = spark.sparkContext
 
     # warm python workers / codegen once
     sc.setJobDescription("warmup")
-    mentions_df().limit(10_000).write.format("noop").mode("overwrite").save()
+    fact_inputs()[0].limit(10_000).write.format("noop").mode("overwrite").save()
 
     for rep in range(args.reps):
-        m = mentions_df().persist()
-        if "extract" in stages:
-            sc.setJobDescription(f"extract rep{rep}")
-            out["extract"].append(noop(m))
-        else:
-            m.count()
-        if "link" in stages:
-            sc.setJobDescription(f"link rep{rep}")
-            out["link"].append(noop(candidates_df(m)))
-        f_ = facts_df(m).persist()
-        if "facts" in stages:
-            sc.setJobDescription(f"facts rep{rep}")
-            out["facts"].append(noop(f_))
-        else:
-            f_.count()
+        def timed(name, build):
+            df = build().persist()
+            stage = {"mentions": "extract", "candidates": "link"}[name]
+            sc.setJobDescription(f"{stage} rep{rep}")
+            out[stage].append(noop(df))
+            return df
+
+        m, c, fi = fact_inputs(timed)
+        f_ = facts_mod.build_facts(fi).persist()
+        sc.setJobDescription(f"facts rep{rep}")
+        out["facts"].append(noop(f_))
         if "graph" in stages:
             sc.setJobDescription(f"graph rep{rep}")
             gb = graph.first_facts(f_).persist()
@@ -161,13 +149,14 @@ def main() -> None:
             out["canon"].append(noop(
                 graph.build_triples(canon.canonicalize_facts(f_, relationships))))
         f_.unpersist()
+        c.unpersist()
         m.unpersist()
 
     print(json.dumps({
         "turns": args.turns, "cpus": cpus, "reps": args.reps,
         "unique_texts": args.unique_texts,
-        "stage_sec": {k: v for k, v in out.items() if v},
-        "stage_min": {k: min(v) for k, v in out.items() if v},
+        "stage_sec": {k: v for k, v in out.items() if k in stages},
+        "stage_min": {k: min(v) for k, v in out.items() if k in stages},
     }))
     spark.stop()
 

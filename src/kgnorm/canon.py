@@ -32,7 +32,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
-DEFAULT_SALT = 16
+from kgnorm.facts import FACT_KEY, ORD_TURN, log1m
+
+SALT = 16
+MAX_ITER = 25
 
 
 def alias_edges(relationships: DataFrame) -> DataFrame:
@@ -43,37 +46,14 @@ def alias_edges(relationships: DataFrame) -> DataFrame:
     return fwd.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 25,
-    salt: int = DEFAULT_SALT,
-    loop_partitions: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Hash-min label propagation. Returns (concept_id, component_id).
 
     ``edges`` must be the symmetric (undirected) edge list with columns
     ``src, dst``.  Isolated vertices are absent (their component is
-    themselves, callers coalesce).
-
-    ``loop_partitions`` temporarily overrides
-    ``spark.sql.shuffle.partitions`` for the iterative loop (restored
-    after): each iteration runs 2 joins + 2 aggregations + an eager
-    checkpoint, so with a KNOWN-small edge list
-    (the ontology alias graph) session-default partition counts make
-    fixed per-task scheduling dominate the loop.  Leave None for
-    unknown-size inputs (document near-dup clustering), where AQE
-    handles sizing.
+    themselves, callers coalesce).  The loop runs at the session's
+    shuffle partitions, which ``canonical_mapping`` sizes.
     """
-    if not loop_partitions:
-        return _cc_loop(edges, max_iter, salt)
-    from kgnorm.session import conf_override
-
-    with conf_override(edges.sparkSession, "spark.sql.shuffle.partitions",
-                       loop_partitions):
-        return _cc_loop(edges, max_iter, salt)
-
-
-def _cc_loop(edges: DataFrame, max_iter: int, salt: int) -> DataFrame:
     edges = edges.localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("src").alias("concept_id"))
@@ -83,7 +63,7 @@ def _cc_loop(edges: DataFrame, max_iter: int, salt: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         changed = Observation()
         # propagate each vertex's label to its neighbors, take the min.
         # two-level aggregation: partial min on (dst, salt) absorbs hot
@@ -91,7 +71,7 @@ def _cc_loop(edges: DataFrame, max_iter: int, salt: int) -> DataFrame:
         prop = (
             edges.join(labels.withColumnRenamed("concept_id", "src"), "src")
             .select(F.col("dst").alias("concept_id"), "label")
-            .withColumn("_salt", F.pmod(F.hash("label"), F.lit(salt)))
+            .withColumn("_salt", F.pmod(F.hash("label"), F.lit(SALT)))
             .groupBy("concept_id", "_salt").agg(F.min("label").alias("label"))
             .groupBy("concept_id").agg(F.min("label").alias("nbr_label"))
         )
@@ -114,27 +94,25 @@ def _cc_loop(edges: DataFrame, max_iter: int, salt: int) -> DataFrame:
     return labels.select("concept_id", F.col("label").alias("component_id"))
 
 
-def canonical_mapping(relationships: DataFrame,
-                      loop_partitions: int | None = None,
-                      n_rel: int | None = None) -> DataFrame:
+def canonical_mapping(relationships: DataFrame, n_rel: int | None = None) -> DataFrame:
     """(concept_id → canonical_concept_id) for every aliased concept.
 
     Canonical = per component, the chain-terminal 'Maps to' target
     (appears as concept_id_2 of a 'Maps to' row and never as
     concept_id_1), min id on ties; else the component min id.
 
-    The whole build runs at ``loop_partitions`` shuffle partitions and
-    materializes eagerly: the alias graph is ontology-bounded (≤
-    vocabulary size, nothing to do with turn count), so at
-    session-default partition counts fixed per-task scheduling across
-    the CC loop's ~2 iterations dominated the canon stage (measured
-    4.9 s of the bench's 7.4 s canon time at 1M turns).  Default
-    ``None`` sizes from the edge count: ~100k edges per partition, floor
-    8, capped at the session default — so a full-OMOP alias graph (~10M
-    rows) still gets wide shuffles while the fixture-sized graph stops
-    paying 64-task fixed costs.  A caller that already holds the
-    relationship row count passes it as ``n_rel`` (each row gives at
-    most two undirected edges); otherwise one count job measures it.
+    The whole build runs at a shuffle-partition count sized from the
+    edge count and materializes eagerly: the alias graph is
+    ontology-bounded (≤ vocabulary size, nothing to do with turn count),
+    so at session-default partition counts fixed per-task scheduling
+    across the CC loop's ~2 iterations dominated the canon stage
+    (measured 4.9 s of the bench's 7.4 s canon time at 1M turns).  The
+    count is ~100k edges per partition, floor 8, capped at the session
+    default — so a full-OMOP alias graph (~10M rows) still gets wide
+    shuffles while the fixture-sized graph stops paying 64-task fixed
+    costs.  A caller that already holds the relationship row count
+    passes it as ``n_rel`` (each row gives at most two undirected
+    edges); otherwise one count job measures it.
     The returned mapping is checkpointed — downstream broadcasts read
     materialized rows, not a replan at restored session partitioning.
 
@@ -146,12 +124,11 @@ def canonical_mapping(relationships: DataFrame,
 
     spark = relationships.sparkSession
     edges = alias_edges(relationships)
-    if loop_partitions is None:
-        sess = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        n_edges = 2 * n_rel if n_rel is not None else edges.count()
-        loop_partitions = max(8, min(sess, n_edges // 100_000 + 1))
+    sess = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_edges = 2 * n_rel if n_rel is not None else edges.count()
+    loop_partitions = max(8, min(sess, n_edges // 100_000 + 1))
     with conf_override(spark, "spark.sql.shuffle.partitions", loop_partitions):
-        comps = _cc_loop(edges, 25, DEFAULT_SALT)
+        comps = connected_components(edges)
 
         maps_to = relationships.filter(F.col("relationship_id") == "Maps to")
         sources = maps_to.select(F.col("concept_id_1").alias("concept_id")).distinct()
@@ -222,21 +199,24 @@ def apply_mapping(facts: DataFrame, mapping: DataFrame) -> DataFrame:
         .withColumn("omop_concept_id", F.coalesce("canonical_concept_id", "omop_concept_id"))
         .drop("concept_id", "canonical_concept_id")
     )
+    # the stored first-evidence position; no ORD_START term, as in the
+    # kg_canonical oracle
+    first = f"first_turn_idx * {ORD_TURN}L + first_start_offset"
     re_agg = (
-        touched.groupBy("conv_id", "omop_concept_id", "assertion", "temporality", "experiencer")
+        touched.groupBy(*FACT_KEY)
         .agg(
-            F.expr("min_by(concept_name, first_turn_idx * 100000000L + first_start_offset)").alias("concept_name"),
-            F.expr("min_by(domain, first_turn_idx * 100000000L + first_start_offset)").alias("domain"),
-            (1.0 - F.exp(F.sum(F.log(F.greatest(1.0 - F.col("confidence"), F.lit(1e-15)))))).alias("confidence"),
+            F.expr(f"min_by(concept_name, {first})").alias("concept_name"),
+            F.expr(f"min_by(domain, {first})").alias("domain"),
+            (1.0 - F.exp(F.sum(log1m(F.col("confidence"))))).alias("confidence"),
             F.sum("evidence_count").alias("evidence_count"),
             F.min("first_turn_idx").alias("first_turn_idx"),
             F.min("first_start_offset").alias("first_start_offset"),
         )
     )
     passthrough = untouched.select(
-        "conv_id", "omop_concept_id", "assertion", "temporality", "experiencer",
+        *FACT_KEY,
         "concept_name", "domain",
-        (1.0 - F.exp(F.log(F.greatest(1.0 - F.col("confidence"), F.lit(1e-15))))).alias("confidence"),
+        (1.0 - F.exp(log1m(F.col("confidence")))).alias("confidence"),
         "evidence_count", "first_turn_idx", "first_start_offset",
     )
     return re_agg.unionByName(passthrough)

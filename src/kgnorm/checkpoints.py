@@ -125,7 +125,6 @@ class StageStore:
         name: str,
         compute,
         resume: bool = True,
-        partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Return the checkpointed stage, computing+writing it if missing.
 
@@ -135,5 +134,5 @@ class StageStore:
         if resume and self.exists(name, spark):
             return self.read(spark, name)
         df = compute()
-        self.write(df, name, partition_by=partition_by)
+        self.write(df, name)
         return self.read(spark, name)

@@ -67,28 +67,23 @@ def mention_facts_input(mentions: DataFrame, top_candidates: DataFrame) -> DataF
     The candidate rows already CARRY the mention attributes
     (kgnorm.link.ATTR_COLS), so this is a pure projection — no join back
     to the mention table (which at target scale is 10^12 × ~5 rows).
-    ``mentions`` is accepted for interface compatibility and only used as
-    a fallback when given candidates lack the attribute columns.
+    ``mentions`` is unused; the two-argument form stays for the callers
+    that pass it (bench.py).
     """
-    want = [
+    return top_candidates.select(
         "conv_id", "turn_idx", "start_offset", "end_offset",
         "omop_concept_id", "concept_name", "domain_id",
         "assertion", "temporality", "experiencer", "confidence",
-    ]
-    if set(want) <= set(top_candidates.columns):
-        return top_candidates.select(*want)
-    cand = top_candidates.select(
-        "conv_id", "turn_idx", "start_offset", "end_offset",
-        "omop_concept_id", "concept_name", "domain_id",
     )
-    m = mentions.select(
-        "conv_id", "turn_idx", "start_offset", "end_offset",
-        "assertion", "temporality", "experiencer", "confidence",
-    )
-    return m.join(cand, ["conv_id", "turn_idx", "start_offset", "end_offset"])
 
 
-def build_facts(fact_inputs: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def log1m(confidence):
+    """``log(1 - confidence)`` with ``1 - confidence`` floored at 1e-15:
+    the noisy-OR term every fact merge sums (see the module docstring)."""
+    return F.log(F.greatest(1.0 - confidence, F.lit(1e-15)))
+
+
+def build_facts(fact_inputs: DataFrame) -> DataFrame:
     """Aggregate FactInput rows into canonical facts (noisy-OR merge).
 
     Shuffle plan: plain ``groupBy`` — Spark's partial (map-side)
@@ -100,8 +95,7 @@ def build_facts(fact_inputs: DataFrame, num_partitions: int | None = None) -> Da
     facts→triples vs 66.6s for the alternative single-exchange plan
     (explicit repartition(conv_id) whose hash(conv) partitioning lets the
     agg and the graph window reuse one exchange — fewer exchanges but
-    2.2× more shuffled bytes).  ``num_partitions`` kept for API
-    compatibility; unused.
+    2.2× more shuffled bytes).
     """
     return (
         fact_inputs
@@ -110,7 +104,7 @@ def build_facts(fact_inputs: DataFrame, num_partitions: int | None = None) -> Da
         .agg(
             F.expr("min_by(concept_name, _ord)").alias("concept_name"),
             F.expr("min_by(domain_id, _ord)").alias("domain"),
-            (1.0 - F.exp(F.sum(F.log(F.greatest(1.0 - F.col("confidence"), F.lit(1e-15)))))).alias("confidence"),
+            (1.0 - F.exp(F.sum(log1m(F.col("confidence"))))).alias("confidence"),
             F.count(F.lit(1)).alias("evidence_count"),
             F.min("turn_idx").alias("first_turn_idx"),
             F.expr("min_by(start_offset, _ord)").alias("first_start_offset"),
@@ -204,7 +198,7 @@ def merge_facts(existing: DataFrame, new_inputs: DataFrame) -> DataFrame:
     def _log1m(side: str):
         return F.when(
             F.col(f"{side}.evidence_count").isNotNull(),
-            F.log(F.greatest(1.0 - F.col(f"{side}.confidence"), F.lit(1e-15))),
+            log1m(F.col(f"{side}.confidence")),
         ).otherwise(F.lit(0.0))
 
     conf = (

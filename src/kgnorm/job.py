@@ -24,8 +24,10 @@ The alias closure (Maps-to hash-min connected components, kgnorm.canon)
 reads only the ontology, so it runs while extraction does, in a session
 of its own (see ``_alias_closure``).
 
-Each stage checkpoints through a StageStore; ``--resume`` skips stages
-whose outputs already exist.  Run it on a cluster as::
+``fact_inputs`` is the one extract→link→FactInput wiring; each caller
+passes it how to materialize a stage.  Each batch stage checkpoints
+through the StageStore ``run_pipeline`` requires; ``--resume`` skips
+stages whose outputs already exist.  Run it on a cluster as::
 
     spark-submit --py-files kgnorm.zip -m kgnorm.job \
         --input <transcripts path/table> --output <warehouse dir> [--resume]
@@ -47,18 +49,39 @@ from kgnorm.checkpoints import StageStore
 BRANCH_THREAD = "kgnorm-branch"
 
 
+def fact_inputs(spark: SparkSession, transcripts: DataFrame, ont: ontology.Ontology,
+                stage=lambda name, build: build(), num_partitions: int | None = None,
+                ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(mentions, candidates, fact_inputs)`` of ``transcripts``: the
+    last is each mention's top candidate as FactInput rows.
+
+    ``stage(name, build)`` is called for ``"mentions"``, then
+    ``"candidates"``, and returns the frame later steps read (a
+    checkpoint, a persisted frame; by default ``build()``).  Linking
+    skips the cascade when every dictionary entry carries a concept id.
+    """
+    dictionary = ontology.broadcast_dictionary(spark, ont)
+    mentions = stage("mentions", lambda: extract.extract_mentions_df(
+        transcripts, dictionary, num_partitions))
+    candidates = stage("candidates", lambda: link.link_mentions(
+        mentions, ontology.concepts_df(spark, ont), ontology.synonyms_df(spark, ont),
+        assume_all_direct=ontology.all_entries_linked(ont),
+    ))
+    return mentions, candidates, facts_mod.mention_facts_input(
+        mentions, link.top_candidates(candidates))
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
-    store: StageStore | None = None,
+    store: StageStore,
     resume: bool = False,
     canonicalize: bool = False,
     num_partitions: int | None = None,
-    data_dir: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run extract→link→facts→graph; returns every stage DataFrame.
 
-    With a ``store``, stages checkpoint and (with ``resume=True``) skip
+    Stages checkpoint to ``store`` and (with ``resume=True``) skip
     recomputation.  ``canonicalize`` adds the CC-based alias-merged fact
     and triple outputs alongside the parity (reference-faithful) ones.
 
@@ -66,18 +89,10 @@ def run_pipeline(
     run as concurrent Spark jobs from driver threads.  A branch's
     exception is raised here once every branch has ended.
     """
-    ont = ontology.load_fixture_ontology(data_dir)
-    dictionary = ontology.broadcast_dictionary(spark, ont)
-    concepts = ontology.concepts_df(spark, ont)
-    synonyms = ontology.synonyms_df(spark, ont)
+    ont = ontology.load_fixture_ontology()
 
-    def checkpointed(name: str, compute, partition_by=None) -> DataFrame:
-        if store is None:
-            # no checkpoint table → persist: each stage is referenced by
-            # several downstream branches, and without materialization the
-            # whole extraction subtree would re-execute once per branch
-            return compute().persist()
-        return store.get_or_compute(spark, name, compute, resume=resume, partition_by=partition_by)
+    def checkpointed(name: str, compute) -> DataFrame:
+        return store.get_or_compute(spark, name, compute, resume=resume)
 
     branches: dict[str, Future] = {}
     # one thread per branch, so a branch waiting on another's result
@@ -92,22 +107,11 @@ def run_pipeline(
             return branches[name]
 
         closure = None
-        if canonicalize and not (
-                resume and store is not None and store.exists("canonical_facts", spark)):
+        if canonicalize and not (resume and store.exists("canonical_facts", spark)):
             closure = branch("closure", _alias_closure, spark, ont)
 
-        mentions = checkpointed(
-            "mentions", lambda: extract.extract_mentions_df(transcripts, dictionary, num_partitions)
-        )
-        all_direct = ontology.all_entries_linked(ont)
-        candidates = checkpointed(
-            "candidates",
-            lambda: link.link_mentions(mentions, concepts, synonyms, assume_all_direct=all_direct),
-        )
-        top = link.top_candidates(candidates)
-        facts = checkpointed(
-            "facts", lambda: facts_mod.build_facts(facts_mod.mention_facts_input(mentions, top))
-        )
+        mentions, candidates, fi = fact_inputs(spark, transcripts, ont, checkpointed, num_partitions)
+        facts = checkpointed("facts", lambda: facts_mod.build_facts(fi))
 
         if canonicalize:
             def canonical() -> tuple[DataFrame, DataFrame]:
@@ -127,19 +131,18 @@ def run_pipeline(
             branch(name, checkpointed, name,
                    lambda build=build: build(graph_base, prepared=True))
 
-        if store is not None:
-            triples = branches["triples"]
+        triples = branches["triples"]
 
-            def lineage() -> DataFrame:
-                all_metrics = (
-                    metrics.stage_metrics(mentions, "mentions")
-                    .unionByName(metrics.stage_metrics(facts, "facts"))
-                    .unionByName(metrics.stage_metrics(triples.result(), "triples"))
-                )
-                store.write(all_metrics, "metrics")
-                return store.read(spark, "metrics")
+        def lineage() -> DataFrame:
+            all_metrics = (
+                metrics.stage_metrics(mentions, "mentions")
+                .unionByName(metrics.stage_metrics(facts, "facts"))
+                .unionByName(metrics.stage_metrics(triples.result(), "triples"))
+            )
+            store.write(all_metrics, "metrics")
+            return store.read(spark, "metrics")
 
-            branch("metrics", lineage)
+        branch("metrics", lineage)
 
     # every thread has ended; read each result so a branch's failure raises
     done = {name: f.result() for name, f in branches.items()}
@@ -150,11 +153,10 @@ def run_pipeline(
         "nodes": done["nodes"],
         "edges": done["edges"],
         "triples": done["triples"],
+        "metrics": done["metrics"],
     }
     if canonicalize:
         out["canonical_facts"], out["canonical_triples"] = done["canonical"]
-    if store is not None:
-        out["metrics"] = done["metrics"]
     return out
 
 
@@ -173,7 +175,6 @@ def run_append(
     new_transcripts: DataFrame,
     output: str,
     num_partitions: int | None = None,
-    data_dir: str | None = None,
     n_buckets: int = 64,
 ) -> dict[str, DataFrame]:
     """Incremental append (the 10^12-turn operating mode): extract+link
@@ -195,24 +196,17 @@ def run_append(
     Returns ``{"mentions", "facts", "triples"}``: the delta's mentions
     and the whole merged facts and triples tables (without ``_bucket``).
     ``out["mentions"]`` is returned PERSISTED (the facts upsert and the
-    caller's span check both read it); callers must ``unpersist()`` it
-    when done — a long-lived session issuing sequential appends would
-    otherwise accumulate cached mention partitions (the CLI does this
-    after its span check).
+    caller's span check both read it; candidates stay lazy); callers
+    must ``unpersist()`` it when done — a long-lived session issuing
+    sequential appends would otherwise accumulate cached mention
+    partitions (the CLI does this after its span check).
     """
     import os
 
-    ont = ontology.load_fixture_ontology(data_dir)
-    dictionary = ontology.broadcast_dictionary(spark, ont)
-    concepts = ontology.concepts_df(spark, ont)
-    synonyms = ontology.synonyms_df(spark, ont)
-
-    mentions = extract.extract_mentions_df(
-        new_transcripts, dictionary, num_partitions).persist()
-    candidates = link.link_mentions(
-        mentions, concepts, synonyms,
-        assume_all_direct=ontology.all_entries_linked(ont))
-    fi = facts_mod.mention_facts_input(mentions, link.top_candidates(candidates))
+    mentions, _, fi = fact_inputs(
+        spark, new_transcripts, ontology.load_fixture_ontology(),
+        lambda name, build: build().persist() if name == "mentions" else build(),
+        num_partitions)
 
     facts_dir = os.path.join(output, "facts_bucketed")
     touched = facts_mod.upsert_facts_parquet(spark, facts_dir, fi, n_buckets=n_buckets)
@@ -257,6 +251,8 @@ def main() -> None:
                         "never raises the input's partition count, and also "
                         "limits the input scan's tasks")
     args = p.parse_args()
+    if args.append and (args.resume or args.canonicalize):
+        p.error("--append takes neither --resume nor --canonicalize")
 
     spark = get_spark("kgnorm-job")
     t0 = time.time()

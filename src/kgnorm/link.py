@@ -192,17 +192,17 @@ def link_mentions(
     mentions: DataFrame,
     concepts: DataFrame,
     synonyms: DataFrame,
-    limit: int = LIMIT,
     assume_all_direct: bool = False,
 ) -> DataFrame:
     """Full linking stage: mentions → CANDIDATES-schema DataFrame.
 
     ``assume_all_direct``: the caller asserts every dictionary entry carries
-    a concept id (checkable driver-side from the ontology object, zero Spark
-    jobs) so the cascade subtree can be skipped entirely.  AQE materializes
-    each cascade exchange as a separate job, so even an EMPTY cascade costs
-    ~10 scheduling rounds — but probing with ``isEmpty()`` would itself run
-    a full pass over the mention stream, which is worse at scale.
+    a concept id (``job.fact_inputs`` decides it from the ontology
+    object, zero Spark jobs) so the cascade subtree can be skipped.
+    AQE materializes each cascade exchange as a separate job, so even an
+    EMPTY cascade costs ~10 scheduling rounds — but probing with
+    ``isEmpty()`` would itself run a full pass over the mention stream,
+    which is worse at scale.
     """
     if assume_all_direct:
         return direct_candidates(mentions)
@@ -212,7 +212,7 @@ def link_mentions(
     ).withColumn("term", normalize_term(F.col("mention_text")))
 
     terms = unlinked.select("term").distinct()
-    mapped_terms = map_terms(terms, concepts, synonyms, limit)
+    mapped_terms = map_terms(terms, concepts, synonyms)
 
     # no explicit broadcast hint: the term side is ontology-bounded and AQE
     # converts the join to broadcast at runtime; an explicit hint forces an

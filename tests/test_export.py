@@ -6,12 +6,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgnorm import export, job, synth
+from kgnorm.checkpoints import StageStore
 
 
 @pytest.fixture(scope="module")
-def pipeline(spark):
+def pipeline(spark, tmp_path_factory):
     transcripts = synth.golden_transcripts(spark)
-    out = job.run_pipeline(spark, transcripts)
+    out = job.run_pipeline(spark, transcripts, StageStore(str(tmp_path_factory.mktemp("wh"))))
     return transcripts, out
 
 

@@ -3,23 +3,16 @@ the same facts a single full batch run produces."""
 
 import inspect
 import os
+import sys
 
+import pytest
 from pyspark.sql import functions as F
 
-from kgnorm import facts as facts_mod, job, link, ontology, synth
+from kgnorm import facts as facts_mod, job, synth
 
 
 def _expected_facts(spark, transcripts, ontology_bundle):
-    from kgnorm.extract import extract_mentions_df
-
-    d = ontology.broadcast_dictionary(spark, ontology_bundle)
-    m = extract_mentions_df(transcripts, d)
-    c = link.link_mentions(
-        m, ontology.concepts_df(spark, ontology_bundle),
-        ontology.synonyms_df(spark, ontology_bundle),
-        assume_all_direct=ontology.all_entries_linked(ontology_bundle))
-    return facts_mod.build_facts(
-        facts_mod.mention_facts_input(m, link.top_candidates(c)))
+    return facts_mod.build_facts(job.fact_inputs(spark, transcripts, ontology_bundle)[2])
 
 
 def _canon(df):
@@ -75,3 +68,19 @@ def test_bucketed_tables_list_on_the_driver(spark):
     n_buckets = inspect.signature(job.run_append).parameters["n_buckets"].default
     threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
     assert int(threshold) >= n_buckets
+
+
+@pytest.mark.parametrize("flag", ["--resume", "--canonicalize"])
+def test_append_rejects_batch_only_flags(monkeypatch, tmp_path, flag):
+    """--append ignores --resume and --canonicalize, so the CLI refuses
+    them, before any session starts."""
+    from kgnorm import session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.setattr(sys, "argv", ["kgnorm.job", "--append", flag, "--output", str(tmp_path)])
+    with pytest.raises(SystemExit) as exit_:
+        job.main()
+    assert exit_.value.code == 2

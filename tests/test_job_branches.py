@@ -63,7 +63,7 @@ def test_closure_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     seen = []
-    cc_loop = canon._cc_loop
+    cc_loop = canon.connected_components
 
     def watched(edges, *args):
         # inside the closure's override: the loop's session has its own
@@ -71,7 +71,7 @@ def test_closure_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
         seen.append((edges.sparkSession.conf.get(key), spark.conf.get(key)))
         return cc_loop(edges, *args)
 
-    monkeypatch.setattr(canon, "_cc_loop", watched)
+    monkeypatch.setattr(canon, "connected_components", watched)
     spark.conf.set(key, "5")
     try:
         job.run_pipeline(spark, synth.golden_transcripts(spark),

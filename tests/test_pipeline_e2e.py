@@ -9,6 +9,7 @@ both sides implement the same semantics, so any gap is a distribution
 bug (lost rows in a shuffle, wrong dedup key, nondeterministic merge).
 """
 
+import dataclasses
 import math
 
 import pytest
@@ -46,9 +47,10 @@ def reference_triples(turns, automaton):
 
 
 @pytest.fixture(scope="module")
-def golden_result(spark):
+def golden_result(spark, tmp_path_factory):
     transcripts = synth.golden_transcripts(spark)
-    out = job.run_pipeline(spark, transcripts, canonicalize=True)
+    out = job.run_pipeline(spark, transcripts, StageStore(str(tmp_path_factory.mktemp("wh"))),
+                           canonicalize=True)
     return transcripts, out
 
 
@@ -68,6 +70,31 @@ def test_every_golden_mention_is_direct_linked(golden_result):
     # fixture dictionary always carries concept ids → all candidates direct
     assert out["candidates"].filter(F.col("method") != "direct").count() == 0
     assert out["candidates"].filter(F.col("rank") == 1).count() == out["mentions"].count()
+
+
+def test_unlinked_entry_takes_the_cascade(spark, ontology_bundle):
+    """An entry without a concept id sends its own mentions through the
+    linking cascade (job.fact_inputs decides); every other mention keeps
+    the direct bypass."""
+    ont = dataclasses.replace(ontology_bundle, dictionary=[
+        (k, (surface, domain, 0 if k == "pneumonia" else cid))
+        for k, (surface, domain, cid) in ontology_bundle.dictionary
+    ])
+    mentions, candidates, fi = job.fact_inputs(spark, synth.golden_transcripts(spark), ont)
+
+    def keyed(df):
+        return {(r.conv_id, r.turn_idx, r.start_offset, r.end_offset): r for r in df.collect()}
+
+    all_mentions = keyed(mentions)
+    unlinked = {k for k, m in all_mentions.items() if m.omop_concept_id == 0}
+    assert unlinked
+    top = keyed(candidates.filter(F.col("rank") == 1))
+    assert set(top) == set(all_mentions)
+    # tier 1 of the cascade: the term equals the concept name "Pneumonia"
+    assert {top[k].method for k in unlinked} == {"exact"}
+    assert {top[k].method for k in set(top) - unlinked} == {"direct"}
+    inputs = keyed(fi)
+    assert {inputs[k].omop_concept_id for k in unlinked} == {255848}
 
 
 def test_negated_pneumonia_triple_emitted_absent(golden_result):
@@ -110,11 +137,11 @@ def test_confidences_in_range_and_merged(golden_result):
     assert out["facts"].filter(F.col("evidence_count") > 1).count() >= 1
 
 
-def test_synth_scale_parity(spark, automaton):
+def test_synth_scale_parity(spark, automaton, tmp_path):
     """240 synthetic turns (30 convs × 8 turns cycling the 10 templates):
     the distributed result must equal the single-node evaluation."""
     transcripts = synth.synth_transcripts(spark, 240)
-    out = job.run_pipeline(spark, transcripts)
+    out = job.run_pipeline(spark, transcripts, StageStore(str(tmp_path / "wh")))
     got = {(t.subj, t.pred, t.obj) for t in out["triples"].collect()}
     turns = [(r.conv_id, r.text) for r in transcripts.collect()]
     want = reference_triples(turns, automaton)
