@@ -10,7 +10,8 @@ are complete are read back instead of recomputed.  Deterministic IDs
 Storage: a V2 table catalog when one is configured (production —
 Iceberg's ``writeTo(...).createOrReplace()`` gives atomic commits +
 snapshots); otherwise plain parquet directories where completeness =
-Spark's ``_SUCCESS`` marker.  The catalog branch is format-parametric:
+the ``_SUCCESS`` marker, which ``get_or_compute`` creates only once the
+stage's gate has passed.  The catalog branch is format-parametric:
 with Iceberg on the classpath it runs ``createOrReplace`` (atomic RTAS);
 for catalogs whose format lacks RTAS (e.g. the built-in session catalog
 with parquet, which is how the branch is exercised in this sandbox —
@@ -26,6 +27,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class StageStore:
@@ -77,7 +79,11 @@ class StageStore:
             return spark is not None and spark.catalog.tableExists(f"{self.catalog}.{name}")
         return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
 
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
+    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
+              mark_success: bool = True) -> None:
+        """Write stage ``name``.  A directory stage written with
+        ``mark_success=False`` gets no ``_SUCCESS`` marker, so it does not
+        count as complete until the caller creates one."""
         if self.catalog:
             table = f"{self.catalog}.{name}"
             if self.table_format == "iceberg":
@@ -112,12 +118,17 @@ class StageStore:
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
+        if not mark_success:
+            w = w.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         w.parquet(self._path(name))
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
+    def read(self, spark: SparkSession, name: str, schema: StructType | None = None) -> DataFrame:
+        """The stage table; a directory stage read with ``schema`` runs no
+        schema-inference job."""
         if self.catalog:
             return spark.read.table(f"{self.catalog}.{name}")
-        return spark.read.parquet(self._path(name))
+        reader = spark.read.schema(schema) if schema is not None else spark.read
+        return reader.parquet(self._path(name))
 
     def get_or_compute(
         self,
@@ -125,14 +136,34 @@ class StageStore:
         name: str,
         compute,
         resume: bool = True,
+        gate=None,
     ) -> DataFrame:
         """Return the checkpointed stage, computing+writing it if missing.
 
         ``compute`` is a zero-arg callable returning the stage DataFrame.
         With ``resume=False`` the stage always recomputes (overwrite).
+        A written directory stage is read back with the schema of the
+        frame just written (``df.schema``), so no job infers it; a resumed
+        stage is read as it is stored.
+
+        ``gate`` (zero-arg; raises to refuse) must pass before the stage
+        counts as complete, and the stage is returned only after it
+        passes.  A directory stage is written without its ``_SUCCESS``
+        marker while the gate runs, and the marker is created once it
+        passes; a catalog stage, whose write is its commit, is written
+        after the gate; an existing stage on resume waits for the gate
+        too.
         """
+        gate = gate or (lambda: None)
         if resume and self.exists(name, spark):
+            gate()
             return self.read(spark, name)
         df = compute()
-        self.write(df, name)
-        return self.read(spark, name)
+        if self.catalog:
+            gate()
+            self.write(df, name)
+            return self.read(spark, name)
+        self.write(df, name, mark_success=False)
+        gate()
+        open(os.path.join(self._path(name), "_SUCCESS"), "w").close()
+        return self.read(spark, name, df.schema)

@@ -6,23 +6,33 @@ Stages whose inputs are ready run as concurrent Spark jobs, each branch
 submitted from its own driver thread (Spark's scheduling within an
 application); the arrows are the only ordering::
 
-    ontology ──→ alias closure ─────────────────────╮  (--canonicalize)
-       ↓ dictionary, concepts                        │
-    transcripts                                      │
+    ontology ──→ alias closure ──────────────────────────╮  (--canonicalize)
+       ↓ dictionary, concepts                             │
+    transcripts ──→ turn-order check ─╮                   │
       → extract   (REBALANCE(conv_id), or a shuffle-free --partitions cap,
                    + broadcast-AC Arrow UDF)
-      → link      (broadcast dictionary direct path + tiered cascade)
-      → facts     (5-part-key noisy-OR hash agg)     │
-          ├──→ canonical_facts ←─────────────────────╯
+      → mentions  (written alongside the check,           │
+          │        committed once it passes)              │
+          ├──→ span check                                 │
+          ├──→ candidates  (link: direct path + tiered cascade)
+          ↓ all-direct: the candidates' plan over mentions;
+          ↓ otherwise the candidates stage                │
+      → facts     (5-part-key noisy-OR hash agg)          │
+          ├──→ canonical_facts ←──────────────────────────╯
           │      → canonical_triples
           └──→ graph_base  (one window for nodes/edges/triples)
                  ├──→ nodes
                  ├──→ edges
-                 └──→ triples → metrics  (per-partition lineage rows)
+                 └──→ triples → metrics  (per-partition lineage rows;
+                                          the triples count is observed
+                                          on this write)
 
 The alias closure (Maps-to hash-min connected components, kgnorm.canon)
 reads only the ontology, so it runs while extraction does, in a session
-of its own (see ``_alias_closure``).
+of its own (see ``_alias_closure``).  No stage is committed before the
+turn-order check passes: ``mentions`` is written without its
+``_SUCCESS`` marker, which is created once the check passes, and only
+then does the stage return (``StageStore.get_or_compute``'s gate).
 
 ``fact_inputs`` is the one extract→link→FactInput wiring; each caller
 passes it how to materialize a stage.  Each batch stage checkpoints
@@ -39,14 +49,19 @@ import argparse
 import json
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
+from typing import NamedTuple
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from kgnorm import canon, extract, facts as facts_mod, graph, link, metrics, ontology, schemas, synth
 from kgnorm.checkpoints import StageStore
 
 BRANCH_THREAD = "kgnorm-branch"
+# closure, turn-order check, span check, candidates, canonical, nodes,
+# edges, triples, metrics: one thread each, so a branch waiting on another's
+# result never holds the thread that one needs
+MAX_BRANCHES = 9
 
 
 def fact_inputs(spark: SparkSession, transcripts: DataFrame, ont: ontology.Ontology,
@@ -58,17 +73,40 @@ def fact_inputs(spark: SparkSession, transcripts: DataFrame, ont: ontology.Ontol
     ``stage(name, build)`` is called for ``"mentions"``, then
     ``"candidates"``, and returns the frame later steps read (a
     checkpoint, a persisted frame; by default ``build()``).  Linking
-    skips the cascade when every dictionary entry carries a concept id.
+    skips the cascade when every dictionary entry carries a concept id;
+    candidates are then a filter and a projection of mentions, so the
+    FactInput rows take that plan over the mentions stage and nothing
+    here reads what the candidates stage returns.  Otherwise they read
+    the candidates stage, so the cascade runs once.
     """
     dictionary = ontology.broadcast_dictionary(spark, ont)
     mentions = stage("mentions", lambda: extract.extract_mentions_df(
         transcripts, dictionary, num_partitions))
-    candidates = stage("candidates", lambda: link.link_mentions(
-        mentions, ontology.concepts_df(spark, ont), ontology.synonyms_df(spark, ont),
-        assume_all_direct=ontology.all_entries_linked(ont),
-    ))
+    direct = ontology.all_entries_linked(ont)
+
+    def linked() -> DataFrame:
+        return link.link_mentions(
+            mentions, ontology.concepts_df(spark, ont), ontology.synonyms_df(spark, ont),
+            assume_all_direct=direct)
+
+    candidates = stage("candidates", linked)
     return mentions, candidates, facts_mod.mention_facts_input(
-        mentions, link.top_candidates(candidates))
+        mentions, link.top_candidates(linked() if direct else candidates))
+
+
+class Checks(NamedTuple):
+    """The batch job's invariant counts: ``run_pipeline(...)["checks"]``."""
+    turns: int              # input rows, from the turn-order check
+    span_violations: int    # metrics.mention_span_check
+    triples: int            # rows of the triples stage, from its metrics rows
+
+
+def unique_turns(order: metrics.TurnOrder) -> int:
+    """The turn count of a turn-order check; ``ValueError`` when a
+    ``(conv_id, turn_idx)`` key repeats."""
+    if order.duplicate_keys:
+        raise ValueError(f"{order.duplicate_keys} duplicate (conv_id, turn_idx) keys")
+    return order.turns
 
 
 def run_pipeline(
@@ -78,26 +116,28 @@ def run_pipeline(
     resume: bool = False,
     canonicalize: bool = False,
     num_partitions: int | None = None,
-) -> dict[str, DataFrame]:
-    """Run extract→link→facts→graph; returns every stage DataFrame.
+) -> dict:
+    """Run extract→link→facts→graph; returns every stage DataFrame, and
+    the job's ``Checks`` under ``"checks"``.
 
     Stages checkpoint to ``store`` and (with ``resume=True``) skip
     recomputation.  ``canonicalize`` adds the CC-based alias-merged fact
     and triple outputs alongside the parity (reference-faithful) ones.
 
     Branches that do not depend on each other (see the module docstring)
-    run as concurrent Spark jobs from driver threads.  A branch's
-    exception is raised here once every branch has ended.
+    run as concurrent Spark jobs from driver threads.  The turn-order
+    check is one of them: a repeated ``(conv_id, turn_idx)`` raises
+    ``ValueError`` before any stage is committed.  A branch's exception
+    is raised here once every branch has ended.
     """
     ont = ontology.load_fixture_ontology()
+    direct = ontology.all_entries_linked(ont)
 
-    def checkpointed(name: str, compute) -> DataFrame:
-        return store.get_or_compute(spark, name, compute, resume=resume)
+    def checkpointed(name: str, compute, gate=None) -> DataFrame:
+        return store.get_or_compute(spark, name, compute, resume=resume, gate=gate)
 
     branches: dict[str, Future] = {}
-    # one thread per branch, so a branch waiting on another's result
-    # never holds the thread that one needs
-    with ThreadPoolExecutor(max_workers=6, thread_name_prefix=BRANCH_THREAD) as pool:
+    with ThreadPoolExecutor(max_workers=MAX_BRANCHES, thread_name_prefix=BRANCH_THREAD) as pool:
 
         def branch(name: str, fn, *args) -> Future:
             # each task gets its own copy of the caller's local properties
@@ -109,8 +149,19 @@ def run_pipeline(
         closure = None
         if canonicalize and not (resume and store.exists("canonical_facts", spark)):
             closure = branch("closure", _alias_closure, spark, ont)
+        order = branch("turn_order", metrics.turn_order_check, transcripts)
 
-        mentions, candidates, fi = fact_inputs(spark, transcripts, ont, checkpointed, num_partitions)
+        def stage(name: str, build) -> DataFrame | Future:
+            if name == "mentions":
+                mentions = checkpointed(name, build, gate=lambda: unique_turns(order.result()))
+                branch("span", metrics.mention_span_check, transcripts, mentions)
+                return mentions
+            candidates = branch(name, checkpointed, name, build)
+            # all-direct: fact_inputs reads the candidates' plan, not this
+            # stage, so facts need not wait for its write
+            return candidates if direct else candidates.result()
+
+        mentions, _, fi = fact_inputs(spark, transcripts, ont, stage, num_partitions)
         facts = checkpointed("facts", lambda: facts_mod.build_facts(fi))
 
         if canonicalize:
@@ -133,14 +184,20 @@ def run_pipeline(
 
         triples = branches["triples"]
 
-        def lineage() -> DataFrame:
+        def lineage() -> tuple[DataFrame, int]:
+            # the triples count rides on this write: its triples rows
+            # count every row of the stage
+            counted = Observation()
             all_metrics = (
                 metrics.stage_metrics(mentions, "mentions")
                 .unionByName(metrics.stage_metrics(facts, "facts"))
                 .unionByName(metrics.stage_metrics(triples.result(), "triples"))
+                .observe(counted, F.sum(F.when(F.col("stage") == "triples", F.col("rows")))
+                         .alias("rows"))
             )
             store.write(all_metrics, "metrics")
-            return store.read(spark, "metrics")
+            return (store.read(spark, "metrics", all_metrics.schema),
+                    counted.get["rows"] or 0)
 
         branch("metrics", lineage)
 
@@ -148,12 +205,13 @@ def run_pipeline(
     done = {name: f.result() for name, f in branches.items()}
     out = {
         "mentions": mentions,
-        "candidates": candidates,
+        "candidates": done["candidates"],
         "facts": facts,
         "nodes": done["nodes"],
         "edges": done["edges"],
         "triples": done["triples"],
-        "metrics": done["metrics"],
+        "metrics": done["metrics"][0],
+        "checks": Checks(done["turn_order"].turns, done["span"], done["metrics"][1]),
     }
     if canonicalize:
         out["canonical_facts"], out["canonical_triples"] = done["canonical"]
@@ -261,13 +319,9 @@ def main() -> None:
     else:
         transcripts = synth.synth_transcripts(spark, args.synth_turns)
 
-    # before any checkpoint write; the same query counts the input
-    order = metrics.turn_order_check(transcripts)
-    if order.duplicate_keys:
-        raise ValueError(f"{order.duplicate_keys} duplicate (conv_id, turn_idx) keys")
-    n_turns = order.turns
-
     if args.append:
+        # before any write; the same query counts the input
+        n_turns = unique_turns(metrics.turn_order_check(transcripts))
         out = run_append(spark, transcripts, args.output,
                          num_partitions=args.partitions)
         violations = metrics.mention_span_check(transcripts, out["mentions"])
@@ -284,21 +338,17 @@ def main() -> None:
         spark.stop()
         return
 
-    store = StageStore(args.output)
-    out = run_pipeline(
-        spark, transcripts, store=store, resume=args.resume,
+    checks = run_pipeline(
+        spark, transcripts, store=StageStore(args.output), resume=args.resume,
         canonicalize=args.canonicalize, num_partitions=args.partitions,
-    )
-
-    violations = metrics.mention_span_check(transcripts, out["mentions"])
-    n_triples = out["triples"].count()
+    )["checks"]
     elapsed = time.time() - t0
     print(json.dumps({
-        "turns": n_turns,
-        "triples": n_triples,
-        "span_violations": violations,
+        "turns": checks.turns,
+        "triples": checks.triples,
+        "span_violations": checks.span_violations,
         "sec": round(elapsed, 2),
-        "turns_per_sec": round(n_turns / elapsed, 1),
+        "turns_per_sec": round(checks.turns / elapsed, 1),
     }))
     spark.stop()
 

@@ -341,6 +341,10 @@ def mention_span_check(transcripts: DataFrame, mentions: DataFrame) -> int:
     never mutated ``text`` and offsets stay valid under the stable
     ``(conv_id, turn_idx)`` ordering.  Returns the number of violations
     (0 == invariant holds).
+
+    ``job.run_pipeline`` starts it in a branch as soon as the mentions
+    checkpoint is read back, so it runs alongside linking and facts;
+    ``job.main --append`` runs it after ``run_append``.
     """
     joined = mentions.join(transcripts.select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"])
     bad = joined.filter(
@@ -359,6 +363,11 @@ def turn_order_check(transcripts: DataFrame) -> TurnOrder:
 
     One query returns the turn count with the duplicate-key count, so a
     caller needs no second scan to count its input.
+
+    ``job.run_pipeline`` runs it in a branch while ``mentions`` is
+    extracted and written, and commits that stage only once it passes
+    (``job.unique_turns``); ``job.main --append`` runs it before
+    ``run_append`` writes anything.
     """
     row = (
         transcripts.groupBy("conv_id", "turn_idx")

@@ -1,14 +1,16 @@
 """Per-SQL-execution timeline of one ``kgnorm.job`` run, from its event log.
 
     PYTHONPATH=src python tools/job_timeline.py --turns 20000 > timeline.txt
+    PYTHONPATH=src python tools/job_timeline.py --input turns.parquet > timeline.txt
     PYTHONPATH=src python tools/job_timeline.py --append --turns 6000 > append.txt
 
-Runs ``python -m kgnorm.job --synth-turns N --canonicalize`` in a child
-process with the Spark event log on (passed through
-``PYSPARK_SUBMIT_ARGS``, so the job's code is untouched), then parses the
-log with the stdlib: one line per SQL execution with its start (seconds
-after the first one started), duration, Spark job count and what it wrote or
-scanned.  Jobs outside any SQL execution are listed too.  Overlapping
+Runs ``python -m kgnorm.job --synth-turns N --canonicalize`` (with
+``--input PATH``: ``--input PATH`` in place of ``--synth-turns N``, for
+example a kgbench workload's transcripts parquet) in a child process
+with the Spark event log on (passed through ``PYSPARK_SUBMIT_ARGS``, so
+the job's code is untouched), then parses the log with the stdlib: one
+line per SQL execution with its start (seconds after the first one
+started), duration, Spark job count and what it wrote or scanned.  Jobs outside any SQL execution are listed too.  Overlapping
 start/end ranges are executions that ran concurrently.
 
 ``--append`` instead runs ``kgnorm.job.run_append`` in one session on N
@@ -60,7 +62,7 @@ spark.stop()
 """
 
 
-def run_job(turns: int, work: str, append: bool) -> str:
+def run_job(turns: int, work: str, append: bool, input_path: str | None) -> str:
     events = os.path.join(work, "events")
     os.makedirs(events)
     conf = {
@@ -77,7 +79,9 @@ def run_job(turns: int, work: str, append: bool) -> str:
     if append:
         cmd = [sys.executable, "-c", _APPEND_CHILD, str(turns), work]
     else:
-        cmd = [sys.executable, "-m", "kgnorm.job", "--synth-turns", str(turns),
+        source = ["--input", os.path.abspath(input_path)] if input_path else [
+            "--synth-turns", str(turns)]
+        cmd = [sys.executable, "-m", "kgnorm.job", *source,
                "--output", os.path.join(work, "out"), "--canonicalize"]
     report = subprocess.run(cmd, env=env, check=True, capture_output=True, text=True).stdout
     if report.strip():
@@ -188,10 +192,14 @@ def main() -> None:
     p.add_argument("--turns", type=int, default=20_000)
     p.add_argument("--append", action="store_true",
                    help="time run_append on a base table and two deltas")
+    p.add_argument("--input", help="transcripts parquet for kgnorm.job --input "
+                                   "(instead of --turns synthesized turns)")
     p.add_argument("--events", help="parse this event log directory; run nothing")
     args = p.parse_args()
+    if args.input and args.append:
+        p.error("--input times the batch job; --append synthesizes its own slices")
     with tempfile.TemporaryDirectory(prefix="kgnorm-timeline-") as work:
-        events = args.events or run_job(args.turns, work, args.append)
+        events = args.events or run_job(args.turns, work, args.append, args.input)
         logs = [p for p in glob.glob(os.path.join(events, "*"))
                 if not p.endswith(".inprogress")]
         for path in logs:
