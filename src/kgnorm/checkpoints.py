@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from kgnorm.session import RAW_LOCAL_FS
+
 
 class StageStore:
     """Directory-backed stage table store with existence-based resume."""
@@ -83,7 +85,9 @@ class StageStore:
               mark_success: bool = True) -> None:
         """Write stage ``name``.  A directory stage written with
         ``mark_success=False`` gets no ``_SUCCESS`` marker, so it does not
-        count as complete until the caller creates one."""
+        count as complete until the caller creates one.  A directory
+        stage is written through the raw local file system
+        (``session.RAW_LOCAL_FS``)."""
         if self.catalog:
             table = f"{self.catalog}.{name}"
             if self.table_format == "iceberg":
@@ -115,7 +119,7 @@ class StageStore:
                     # leaves partition metadata pointing at the old paths
                     sql(f"MSCK REPAIR TABLE {strip(table)}")
             return
-        w = df.write.mode("overwrite")
+        w = df.write.options(**RAW_LOCAL_FS).mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         if not mark_success:

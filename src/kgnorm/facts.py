@@ -363,10 +363,13 @@ def write_bucketed(df: DataFrame, path: str, n_touched: int) -> None:
     """Overwrite ``path`` partitioned by ``df``'s ``n_touched`` distinct
     ``_bucket`` values, one file per bucket, the buckets spread over the
     session's cores.  The explicit partition count keeps AQE from
-    coalescing a small write into one task."""
+    coalescing a small write into one task.  A local table is written
+    through the raw local file system (``session.RAW_LOCAL_FS``)."""
+    from kgnorm.session import RAW_LOCAL_FS
+
     tasks = min(n_touched, df.sparkSession.sparkContext.defaultParallelism)
     (df.repartition(tasks, "_bucket")
-     .write.mode("overwrite").partitionBy("_bucket").parquet(path))
+     .write.options(**RAW_LOCAL_FS).mode("overwrite").partitionBy("_bucket").parquet(path))
 
 
 def _partition_overwrite(spark, mode: str):

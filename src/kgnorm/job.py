@@ -83,11 +83,10 @@ def fact_inputs(spark: SparkSession, transcripts: DataFrame, ont: ontology.Ontol
     mentions = stage("mentions", lambda: extract.extract_mentions_df(
         transcripts, dictionary, num_partitions))
     direct = ontology.all_entries_linked(ont)
+    concepts, synonyms = ontology.concepts_df(spark, ont), ontology.synonyms_df(spark, ont)
 
     def linked() -> DataFrame:
-        return link.link_mentions(
-            mentions, ontology.concepts_df(spark, ont), ontology.synonyms_df(spark, ont),
-            assume_all_direct=direct)
+        return link.link_mentions(mentions, concepts, synonyms, assume_all_direct=direct)
 
     candidates = stage("candidates", linked)
     return mentions, candidates, facts_mod.mention_facts_input(

@@ -14,6 +14,19 @@ from pyspark.sql import SparkSession
 
 SRC_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Writer options for the stage and bucketed tables.  Without Hadoop's
+# native library, the local file system sets each permission by forking a
+# ``chmod`` from the driver JVM: the default, checksummed one forks for
+# every directory, data file and ``.crc`` file it creates, so three per
+# partition directory of a bucketed table.  The raw local file system
+# writes no ``.crc`` files, which leaves two.  The write gets its own
+# instance instead of the session's cached one, so nothing else in the
+# session changes; both keys act on ``file:`` paths only.
+RAW_LOCAL_FS = {
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
+
 
 class conf_override:
     """Scoped ``spark.conf`` override, restored on exit.

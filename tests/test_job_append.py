@@ -84,3 +84,23 @@ def test_append_rejects_batch_only_flags(monkeypatch, tmp_path, flag):
     with pytest.raises(SystemExit) as exit_:
         job.main()
     assert exit_.value.code == 2
+
+
+def test_local_tables_written_without_checksum_files(spark, tmp_path):
+    """Bucketed tables and directory stages go through the raw local file
+    system: no ``.crc`` sidecar per file, and the rows read back whole
+    through the session's own (checksummed) file system."""
+    from kgnorm.checkpoints import StageStore
+
+    df = spark.range(40).select(F.col("id").cast("int").alias("conv_id"),
+                                (F.col("id") % 8).cast("int").alias("_bucket"))
+    bucketed = str(tmp_path / "bucketed")
+    facts_mod.write_bucketed(df, bucketed, 8)
+    store = StageStore(str(tmp_path / "stages"))
+    stage = store.get_or_compute(spark, "ids", lambda: df)
+
+    written = [f for _, _, fs in os.walk(tmp_path) for f in fs]
+    assert not [f for f in written if f.endswith(".crc")], written
+    assert len(_bucket_files(bucketed)) == 8
+    assert sorted(r.conv_id for r in spark.read.parquet(bucketed).collect()) == list(range(40))
+    assert stage.count() == 40 and store.exists("ids")
