@@ -25,7 +25,8 @@ Algorithm (driver-side loop over DataFrames):
    components without such a terminal use the min concept_id.
 
 ``localCheckpoint`` truncates the iterative lineage each round so plans
-don't grow exponentially.
+don't grow exponentially.  The closure is plain Spark in the caller's
+session: no conf of its own, no session of its own.
 """
 
 from __future__ import annotations
@@ -51,8 +52,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
 
     ``edges`` must be the symmetric (undirected) edge list with columns
     ``src, dst``.  Isolated vertices are absent (their component is
-    themselves, callers coalesce).  The loop runs at the session's
-    shuffle partitions, which ``canonical_mapping`` sizes.
+    themselves, callers coalesce).
     """
     edges = edges.localCheckpoint(eager=True)
     labels = (
@@ -94,64 +94,42 @@ def connected_components(edges: DataFrame) -> DataFrame:
     return labels.select("concept_id", F.col("label").alias("component_id"))
 
 
-def canonical_mapping(relationships: DataFrame, n_rel: int | None = None) -> DataFrame:
+def canonical_mapping(relationships: DataFrame) -> DataFrame:
     """(concept_id → canonical_concept_id) for every aliased concept.
 
     Canonical = per component, the chain-terminal 'Maps to' target
     (appears as concept_id_2 of a 'Maps to' row and never as
-    concept_id_1), min id on ties; else the component min id.
+    concept_id_1), min id on ties; else the component min id: one
+    aggregation over the 'Maps to' endpoints, then one per component.
 
-    The whole build runs at a shuffle-partition count sized from the
-    edge count and materializes eagerly: the alias graph is
-    ontology-bounded (≤ vocabulary size, nothing to do with turn count),
-    so at session-default partition counts fixed per-task scheduling
-    across the CC loop's ~2 iterations dominated the canon stage
-    (measured 4.9 s of the bench's 7.4 s canon time at 1M turns).  The
-    count is ~100k edges per partition, floor 8, capped at the session
-    default — so a full-OMOP alias graph (~10M rows) still gets wide
-    shuffles while the fixture-sized graph stops paying 64-task fixed
-    costs.  A caller that already holds the relationship row count
-    passes it as ``n_rel`` (each row gives at most two undirected
-    edges); otherwise one count job measures it.
-    The returned mapping is checkpointed — downstream broadcasts read
-    materialized rows, not a replan at restored session partitioning.
-
-    The override is session-wide, so a caller running other stages at
-    the same time passes relationships built in ``spark.newSession()``,
-    which shares the SparkContext but has its own SQL conf.
+    It runs at the session's shuffle partitions: the alias graph is
+    ontology-bounded and AQE coalesces its shuffles.  On the fixture
+    ontology an edge-count-sized override ran the same jobs, stages,
+    tasks and rows as none, at 8 and at 64 session partitions.  The
+    mapping is checkpointed eagerly, so a branch thread materializes it,
+    and downstream broadcasts read its rows instead of replanning.
     """
-    from kgnorm.session import conf_override
+    comps = connected_components(alias_edges(relationships))
 
-    spark = relationships.sparkSession
-    edges = alias_edges(relationships)
-    sess = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    n_edges = 2 * n_rel if n_rel is not None else edges.count()
-    loop_partitions = max(8, min(sess, n_edges // 100_000 + 1))
-    with conf_override(spark, "spark.sql.shuffle.partitions", loop_partitions):
-        comps = connected_components(edges)
-
-        maps_to = relationships.filter(F.col("relationship_id") == "Maps to")
-        sources = maps_to.select(F.col("concept_id_1").alias("concept_id")).distinct()
-        targets = maps_to.select(F.col("concept_id_2").alias("concept_id")).distinct()
-        terminals = targets.join(sources, "concept_id", "left_anti")
-
-        comp_terminal = (
-            comps.join(terminals, "concept_id", "left_semi")
-            .groupBy("component_id")
-            .agg(F.min("concept_id").alias("terminal_id"))
-        )
-        comp_min = comps.groupBy("component_id").agg(F.min("concept_id").alias("min_id"))
-        canon = (
-            comps.join(comp_min, "component_id")
-            .join(comp_terminal, "component_id", "left")
-            .select(
-                "concept_id",
-                F.coalesce(F.col("terminal_id"), F.col("min_id")).alias("canonical_concept_id"),
-            )
-        )
-        return canon.filter(
-            F.col("concept_id") != F.col("canonical_concept_id")
-        ).localCheckpoint(eager=True)
+    maps_to = relationships.filter(F.col("relationship_id") == "Maps to")
+    terminals = (
+        maps_to.select(F.col("concept_id_2").alias("concept_id"), F.lit(True).alias("terminal"))
+        .unionByName(maps_to.select(F.col("concept_id_1").alias("concept_id"),
+                                    F.lit(False).alias("terminal")))
+        .groupBy("concept_id").agg(F.min("terminal").alias("terminal"))
+    )
+    canonical = (
+        comps.join(terminals, "concept_id", "left")
+        .groupBy("component_id")
+        .agg(F.coalesce(F.min(F.when(F.col("terminal"), F.col("concept_id"))),
+                        F.min("concept_id")).alias("canonical_concept_id"))
+    )
+    return (
+        comps.join(canonical, "component_id")
+        .select("concept_id", "canonical_concept_id")
+        .filter(F.col("concept_id") != F.col("canonical_concept_id"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def canonicalize_facts(facts: DataFrame, relationships: DataFrame) -> DataFrame:

@@ -11,7 +11,9 @@ Storage: a V2 table catalog when one is configured (production —
 Iceberg's ``writeTo(...).createOrReplace()`` gives atomic commits +
 snapshots); otherwise plain parquet directories where completeness =
 the ``_SUCCESS`` marker, which ``get_or_compute`` creates only once the
-stage's gate has passed.  The catalog branch is format-parametric:
+stage's gate has passed.  The marker is probed and created through the
+Hadoop ``FileSystem`` of the base path (``session.hadoop_fs``), so a
+``file:``, ``hdfs:`` or ``s3a:`` base works as a local path does.  The catalog branch is format-parametric:
 with Iceberg on the classpath it runs ``createOrReplace`` (atomic RTAS);
 for catalogs whose format lacks RTAS (e.g. the built-in session catalog
 with parquet, which is how the branch is exercised in this sandbox —
@@ -29,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from kgnorm.session import RAW_LOCAL_FS
+from kgnorm.session import RAW_LOCAL_FS, hadoop_fs
 
 
 class StageStore:
@@ -75,11 +77,14 @@ class StageStore:
         return registered is None and "." not in self.catalog
 
     def exists(self, name: str, spark: SparkSession | None = None) -> bool:
+        spark = spark or SparkSession.active()
         if self.catalog:
-            # a driver thread has no active session: callers there pass one
-            spark = spark or SparkSession.getActiveSession()
-            return spark is not None and spark.catalog.tableExists(f"{self.catalog}.{name}")
-        return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
+            return spark.catalog.tableExists(f"{self.catalog}.{name}")
+        fs, marker = hadoop_fs(spark, self._success(name))
+        return fs.exists(marker)
+
+    def _success(self, name: str) -> str:
+        return os.path.join(self._path(name), "_SUCCESS")
 
     def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
               mark_success: bool = True) -> None:
@@ -169,5 +174,7 @@ class StageStore:
             return self.read(spark, name)
         self.write(df, name, mark_success=False)
         gate()
-        open(os.path.join(self._path(name), "_SUCCESS"), "w").close()
+        # no permission argument: the raw local file system forks no chmod
+        fs, marker = hadoop_fs(spark, self._success(name), RAW_LOCAL_FS)
+        fs.create(marker).close()
         return self.read(spark, name, df.schema)

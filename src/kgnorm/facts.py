@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from kgnorm import schemas
+from kgnorm.session import RAW_LOCAL_FS, conf_override, hadoop_fs
 
 FACT_KEY = ["conv_id", "omop_concept_id", "assertion", "temporality", "experiencer"]
 
@@ -225,21 +226,10 @@ def bucket_col(n_buckets: int):
     return F.pmod(F.hash("conv_id"), F.lit(n_buckets))
 
 
-def _hadoop_fs(spark, path_str: str):
-    """(FileSystem, Path) for ``path_str`` resolved through the session's
-    Hadoop conf — works for any warehouse scheme (file://, hdfs://,
-    s3a://), unlike driver-local ``os.path`` probes which always say
-    "missing" on a remote URI and would silently turn every append into
-    a delta-only overwrite (r4 ADVICE)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path_str)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 def _facts_table_exists(spark, facts_dir: str) -> bool:
     """Table presence = any ``_bucket=`` partition directory (dynamic /
     staged commits don't maintain a root ``_SUCCESS``)."""
-    fs, hpath = _hadoop_fs(spark, facts_dir)
+    fs, hpath = hadoop_fs(spark, facts_dir)
     if not fs.exists(hpath):
         return False
     return any(
@@ -272,7 +262,7 @@ def recover_staged_upsert(spark, facts_dir: str) -> None:
     commit; this is the plain-parquet equivalent, same shape as
     ``kgnorm.checkpoints.StageStore``'s staged CTAS-then-rename.)
     """
-    fs, staging = _hadoop_fs(spark, _staging_dir(facts_dir))
+    fs, staging = hadoop_fs(spark, _staging_dir(facts_dir))
     if not fs.exists(staging):
         return
     jvm = spark._jvm
@@ -338,7 +328,7 @@ def upsert_facts_parquet(
             delta.drop("_bucket"),
         ).withColumn("_bucket", bucket_col(n_buckets))
         staging = _staging_dir(facts_dir)
-        fs, spath = _hadoop_fs(spark, staging)
+        fs, spath = hadoop_fs(spark, staging)
         fs.delete(spath, True)
         # static overwrite of the (fresh) staging dir — a session-wide
         # dynamic partitionOverwriteMode would skip the root _SUCCESS
@@ -365,16 +355,12 @@ def write_bucketed(df: DataFrame, path: str, n_touched: int) -> None:
     session's cores.  The explicit partition count keeps AQE from
     coalescing a small write into one task.  A local table is written
     through the raw local file system (``session.RAW_LOCAL_FS``)."""
-    from kgnorm.session import RAW_LOCAL_FS
-
     tasks = min(n_touched, df.sparkSession.sparkContext.defaultParallelism)
     (df.repartition(tasks, "_bucket")
      .write.options(**RAW_LOCAL_FS).mode("overwrite").partitionBy("_bucket").parquet(path))
 
 
 def _partition_overwrite(spark, mode: str):
-    from kgnorm.session import conf_override
-
     return conf_override(spark, "spark.sql.sources.partitionOverwriteMode", mode)
 
 

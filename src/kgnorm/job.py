@@ -28,8 +28,8 @@ application); the arrows are the only ordering::
                                           on this write)
 
 The alias closure (Maps-to hash-min connected components, kgnorm.canon)
-reads only the ontology, so it runs while extraction does, in a session
-of its own (see ``_alias_closure``).  No stage is committed before the
+reads only the ontology, so it runs while extraction does, as a plain
+branch in the job's session.  No stage is committed before the
 turn-order check passes: ``mentions`` is written without its
 ``_SUCCESS`` marker, which is created once the check passes, and only
 then does the stage return (``StageStore.get_or_compute``'s gate).
@@ -39,7 +39,7 @@ passes it how to materialize a stage.  Each batch stage checkpoints
 through the StageStore ``run_pipeline`` requires; ``--resume`` skips
 stages whose outputs already exist.  Run it on a cluster as::
 
-    spark-submit --py-files kgnorm.zip -m kgnorm.job \
+    spark-submit --py-files kgnorm.zip src/kgnorm/job.py \
         --input <transcripts path/table> --output <warehouse dir> [--resume]
 """
 
@@ -141,13 +141,19 @@ def run_pipeline(
         def branch(name: str, fn, *args) -> Future:
             # each task gets its own copy of the caller's local properties
             # (job group, scheduler pool): Spark keeps a running query's
-            # execution id there, so two threads must not share one copy
-            branches[name] = pool.submit(inheritable_thread_target(spark)(fn), *args)
+            # execution id there, so two threads must not share one copy.
+            # The active session is not among them: set it to ``spark``
+            def in_session(*a):
+                spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
+                return fn(*a)
+
+            branches[name] = pool.submit(inheritable_thread_target(spark)(in_session), *args)
             return branches[name]
 
         closure = None
         if canonicalize and not (resume and store.exists("canonical_facts", spark)):
-            closure = branch("closure", _alias_closure, spark, ont)
+            closure = branch("closure", lambda: canon.canonical_mapping(
+                ontology.relationships_df(spark, ont)))
         order = branch("turn_order", metrics.turn_order_check, transcripts)
 
         def stage(name: str, build) -> DataFrame | Future:
@@ -215,16 +221,6 @@ def run_pipeline(
     if canonicalize:
         out["canonical_facts"], out["canonical_triples"] = done["canonical"]
     return out
-
-
-def _alias_closure(spark: SparkSession, ont: ontology.Ontology) -> DataFrame:
-    """The ontology's alias mapping (``canon.canonical_mapping``), built in
-    its own session: the closure overrides ``spark.sql.shuffle.partitions``
-    for its loop, and stages planned meanwhile in ``spark`` must keep the
-    caller's value.  The mapping is checkpointed, so joining it into
-    ``spark``'s plans reads its rows and replans nothing."""
-    relationships = ontology.relationships_df(spark.newSession(), ont)
-    return canon.canonical_mapping(relationships, n_rel=len(ont.relationships))
 
 
 def run_append(

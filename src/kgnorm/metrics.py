@@ -17,23 +17,16 @@ from pyspark.sql import DataFrame, Window, functions as F
 from kgnorm import schemas
 
 
-def stage_metrics(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition row/conversation counts for a stage output.
-
-    ``partition_id`` is the physical partition the row lived in when the
-    stage materialized — the lineage hook for debugging skew and for
-    verifying a resumed run covered every partition.
-    """
+def _lineage(df: DataFrame, stage: str, key: str, key_col) -> DataFrame:
+    """Rows, distinct conversations and the turn range of ``df`` per
+    ``key_col``, as ``(stage, <key>, rows, convs, min_turn_idx,
+    max_turn_idx)`` rows."""
     cols = df.columns
     conv = F.col("conv_id") if "conv_id" in cols else F.lit("")
     turn = F.col("turn_idx") if "turn_idx" in cols else F.lit(None).cast("int")
     return (
-        df.select(
-            F.spark_partition_id().alias("partition_id"),
-            conv.alias("conv_id"),
-            turn.alias("turn_idx"),
-        )
-        .groupBy("partition_id")
+        df.select(key_col.alias(key), conv.alias("conv_id"), turn.alias("turn_idx"))
+        .groupBy(key)
         .agg(
             F.count(F.lit(1)).alias("rows"),
             F.count_distinct("conv_id").alias("convs"),
@@ -42,9 +35,19 @@ def stage_metrics(df: DataFrame, stage: str) -> DataFrame:
         )
         .select(
             F.lit(stage).alias("stage"),
-            "partition_id", "rows", "convs", "min_turn_idx", "max_turn_idx",
+            key, "rows", "convs", "min_turn_idx", "max_turn_idx",
         )
     )
+
+
+def stage_metrics(df: DataFrame, stage: str) -> DataFrame:
+    """Per-partition row/conversation counts for a stage output.
+
+    ``partition_id`` is the physical partition the row lived in when the
+    stage materialized — the lineage hook for debugging skew and for
+    verifying a resumed run covered every partition.
+    """
+    return _lineage(df, stage, "partition_id", F.spark_partition_id())
 
 
 def logical_lineage(df: DataFrame, stage: str, bucket,
@@ -65,26 +68,7 @@ def logical_lineage(df: DataFrame, stage: str, bucket,
     deterministic integer expression works and oracle replication just
     mirrors it).
     """
-    cols = df.columns
-    turn = F.col("turn_idx") if "turn_idx" in cols else F.lit(None).cast("int")
-    return (
-        df.select(
-            F.pmod(bucket, F.lit(n_buckets)).cast("int").alias("bucket"),
-            F.col("conv_id").alias("conv_id"),
-            turn.alias("turn_idx"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.count_distinct("conv_id").alias("convs"),
-            F.min("turn_idx").alias("min_turn_idx"),
-            F.max("turn_idx").alias("max_turn_idx"),
-        )
-        .select(
-            F.lit(stage).alias("stage"),
-            "bucket", "rows", "convs", "min_turn_idx", "max_turn_idx",
-        )
-    )
+    return _lineage(df, stage, "bucket", F.pmod(bucket, F.lit(n_buckets)).cast("int"))
 
 
 def domain_counts(facts: DataFrame) -> DataFrame:

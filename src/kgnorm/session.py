@@ -28,6 +28,23 @@ RAW_LOCAL_FS = {
 }
 
 
+def hadoop_fs(spark, path_str: str, conf: dict | None = None):
+    """(FileSystem, Path) for ``path_str`` resolved through the session's
+    Hadoop conf, with ``conf``'s keys set on a copy of it when given —
+    works for any warehouse scheme (file://, hdfs://, s3a://), unlike
+    driver-local ``os.path`` probes which always say "missing" on a
+    remote URI and would silently turn every append into a delta-only
+    overwrite (r4 ADVICE)."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    if conf:
+        hconf = jvm.org.apache.hadoop.conf.Configuration(hconf)
+        for k, v in conf.items():
+            hconf.set(k, v)
+    hpath = jvm.org.apache.hadoop.fs.Path(path_str)
+    return hpath.getFileSystem(hconf), hpath
+
+
 class conf_override:
     """Scoped ``spark.conf`` override, restored on exit.
 

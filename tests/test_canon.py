@@ -120,15 +120,5 @@ def test_four_hop_chain_converges_to_terminal(spark):
     assert got == {500: 1, 400: 1, 300: 1, 200: 1}
 
 
-def test_known_row_count_equals_counted_path(spark, ontology_bundle):
-    from kgnorm import ontology
-
-    rels = ontology.relationships_df(spark, ontology_bundle)
-    counted = sorted(canon.canonical_mapping(rels).collect())
-    given = sorted(canon.canonical_mapping(
-        rels, n_rel=len(ontology_bundle.relationships)).collect())
-    assert counted and given == counted
-
-
 def test_no_alias_rows_gives_empty_mapping(spark):
-    assert canon.canonical_mapping(_rels(spark, []), n_rel=0).collect() == []
+    assert canon.canonical_mapping(_rels(spark, [])).collect() == []

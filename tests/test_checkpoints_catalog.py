@@ -1,7 +1,8 @@
 """StageStore catalog backend — the same writeTo/tableExists/read.table
 code path production Iceberg uses, exercised through the V2 session
 catalog (parquet CTAS), plus a true-Iceberg test that runs whenever the
-runtime jar is on the classpath (absent in this sandbox → skipped)."""
+runtime jar is on the classpath (absent in this sandbox → skipped) —
+and the directory backend on a URI base."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,6 +63,23 @@ class TestCatalogStageStore:
         t2 = sorted((t.subj, t.pred, t.obj, t.assertion)
                     for t in out2["triples"].collect())
         assert t1 == t2 and len(t1) > 0
+
+
+def test_directory_store_on_a_file_uri_writes_and_resumes(spark, tmp_path):
+    """A URI base goes through the Hadoop file system: the marker is
+    created, ``exists`` sees it, and a resumed call reads the stage."""
+    store = StageStore("file://" + str(tmp_path))
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return spark.range(5).select(F.col("id"))
+
+    assert not store.exists("stage_u", spark)
+    assert store.get_or_compute(spark, "stage_u", compute).count() == 5
+    assert store.exists("stage_u", spark) and (tmp_path / "stage_u" / "_SUCCESS").exists()
+    again = store.get_or_compute(spark, "stage_u", compute)
+    assert sorted(r.id for r in again.collect()) == list(range(5)) and calls == [1]
 
 
 class _CallLog:

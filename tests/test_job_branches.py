@@ -1,12 +1,14 @@
 """run_pipeline's concurrent branches: deterministic outputs, failure
-propagation, and session-conf isolation of the alias closure."""
+propagation, a resume that skips the alias closure, and branch threads
+that see the caller's session."""
 
 import os
 import threading
 
 import pytest
+from pyspark.sql import SparkSession
 
-from kgnorm import canon, graph, job, synth
+from kgnorm import canon, graph, job, metrics, synth
 from kgnorm.checkpoints import StageStore
 
 STAGES = ["mentions", "candidates", "facts", "graph_base", "nodes", "edges",
@@ -37,7 +39,7 @@ def test_resume_reads_canonical_facts_without_the_closure(spark, tmp_path, monke
     def closure(*args):
         raise AssertionError("the closure ran on resume")
 
-    monkeypatch.setattr(job, "_alias_closure", closure)
+    monkeypatch.setattr(canon, "canonical_mapping", closure)
     again = job.run_pipeline(spark, transcripts, store=store, resume=True, canonicalize=True)
     assert sorted(map(repr, again["canonical_triples"].collect())) == want
 
@@ -59,24 +61,14 @@ def test_branch_failure_raises_and_leaves_no_thread(spark, tmp_path, monkeypatch
     assert alive == []
 
 
-def test_closure_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
+def test_branch_threads_see_the_callers_session(spark, tmp_path, monkeypatch):
     seen = []
-    cc_loop = canon.connected_components
+    span_check = metrics.mention_span_check
 
-    def watched(edges, *args):
-        # inside the closure's override: the loop's session has its own
-        # value, the caller's session must still read its own
-        seen.append((edges.sparkSession.conf.get(key), spark.conf.get(key)))
-        return cc_loop(edges, *args)
+    def watched(*args):
+        seen.append(SparkSession.getActiveSession() is spark)
+        return span_check(*args)
 
-    monkeypatch.setattr(canon, "connected_components", watched)
-    spark.conf.set(key, "5")
-    try:
-        job.run_pipeline(spark, synth.golden_transcripts(spark),
-                         store=StageStore(str(tmp_path / "wh")), canonicalize=True)
-        assert spark.conf.get(key) == "5"
-    finally:
-        spark.conf.set(key, prev)
-    assert seen == [("8", "5")]
+    monkeypatch.setattr(metrics, "mention_span_check", watched)
+    job.run_pipeline(spark, synth.golden_transcripts(spark), store=StageStore(str(tmp_path / "wh")))
+    assert seen == [True]

@@ -1,8 +1,10 @@
 """The batch job's invariant checks run as branches of ``run_pipeline``:
 the turn-order check still refuses a repeated key before any stage is
-committed, and the span check still counts a bad offset."""
+committed, on a resumed run too, and the span check still counts a bad
+offset."""
 
 import json
+import shutil
 import sys
 
 import pytest
@@ -29,6 +31,21 @@ def test_repeated_turn_key_commits_no_stage(spark, tmp_path, monkeypatch, capsys
         _main(spark, monkeypatch, capsys, "--input", str(tmp_path / "in"),
               "--output", str(out), "--canonicalize")
     assert list(out.rglob("_SUCCESS")) == []
+
+
+def test_resumed_run_waits_for_the_turn_order_check(spark, tmp_path, monkeypatch, capsys):
+    turns = synth.synth_transcripts(spark, 240)
+    turns.write.parquet(str(tmp_path / "in"))
+    turns.unionByName(turns.limit(1)).write.parquet(str(tmp_path / "in_dup"))
+    out = tmp_path / "out"
+    _main(spark, monkeypatch, capsys, "--input", str(tmp_path / "in"), "--output", str(out))
+    shutil.rmtree(out / "graph_base")
+    # mentions and facts exist: the resumed run reads them, but must not
+    # build graph_base on them before the check refuses the input
+    with pytest.raises(ValueError, match="1 duplicate"):
+        _main(spark, monkeypatch, capsys, "--input", str(tmp_path / "in_dup"),
+              "--output", str(out), "--resume")
+    assert not (out / "graph_base" / "_SUCCESS").exists()
 
 
 def test_span_check_counts_a_shifted_offset(spark, tmp_path, monkeypatch, capsys):
